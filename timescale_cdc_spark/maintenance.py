@@ -20,7 +20,6 @@ from __future__ import annotations
 import argparse
 import datetime as dt
 import json
-import os
 
 from timescale_cdc_spark.cdc.log import EventLog
 from timescale_cdc_spark.cdc.retention import (
@@ -53,7 +52,8 @@ def run_maintenance(
     Timescale uses for its policies:
 
     - ``ann_index_path``: compact the IvfIndex's append-fragmented
-      cell files (leaf-granular atomic swap, contents unchanged) and
+      cell files (one file per cell behind the two-rename swap,
+      contents unchanged) and
       report staleness (appended fraction, quantization drift, cell
       imbalance) with its rebuild flag — the rebuild itself stays an
       operator decision (a KMeans refit is not something to trigger
@@ -153,7 +153,7 @@ def run_maintenance(
         # an unbuilt index (or one predating the meta sidecar) must
         # degrade to an error FIELD, not raise after retention and
         # compaction already ran and lose the whole report.
-        if os.path.isdir(idx._meta_path):
+        if idx.exists():
             report["ann_index"] = idx.staleness()
         else:
             report["ann_index"] = {

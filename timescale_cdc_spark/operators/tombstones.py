@@ -1,8 +1,9 @@
 """Shared delete/tombstone machinery for the persisted ANN indexes
 (round 14, VERDICT r13 #4): a pretraining corpus takes takedowns, so
-the index family (IvfIndex, LshIndex, Sq8Index, IvfSq8Index) needs
-``delete`` to take effect immediately and compaction to reclaim the
-bytes later — the Lucene live-docs / FAISS ``remove_ids`` pattern
+every persisted index kind (operators/vindex.py — IvfIndex, LshIndex,
+PqIndex, IvfPqIndex, Sq8Index, IvfSq8Index, all through the one
+VectorIndex core) needs ``delete`` to take effect immediately and
+compaction to reclaim the bytes later — the Lucene live-docs / FAISS ``remove_ids`` pattern
 re-expressed for a parquet-backed store:
 
 * ``delete(ids)`` appends the (distinct, not-already-deleted) ids to

@@ -1310,7 +1310,7 @@ def c3_ann_lsh_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
       as pure JVM lookup-sum expressions, exact-cosine re-rank of the
       ADC top-50; the billion-vector compression standard (Jégou et
       al., TPAMI 2011), recall-gated like the other families.
-    - method='ivfpq': residual IVF-PQ (operators/pq.py::IvfPqIndex,
+    - method='ivfpq': residual IVF-PQ (operators/vindex.py::IvfPqIndex,
       round 8 tag — VERDICT r7 next #2) — coarse KMeans cells + PQ
       over RESIDUALS, probe-pruned partition reads × compressed
       codes; the FAISS billion-scale design, recall-gated like the
@@ -1321,12 +1321,12 @@ def c3_ann_lsh_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
       (4× less I/O), exact refine of the approx top-50 by id; FAISS's
       SQ8 flat index, recall-gated like the other families.
     - method='sq8_index': the PERSISTED build-once/query-many SQ8
-      variant (round 11, operators/similarity.py::Sq8Index — VERDICT
+      variant (round 11, operators/vindex.py::Sq8Index — VERDICT
       r10 #4): bounds trained and corpus encoded once at build,
       repeat query batches read compressed codes off disk; must meet
       the same recall floor from the persisted read path.
     - method='ivf_sq8': IVF + SQ8 with residual encoding (round 11,
-      operators/similarity.py::IvfSq8Index — FAISS's IVF<n>,SQ8):
+      operators/vindex.py::IvfSq8Index — FAISS's IVF<n>,SQ8):
       coarse cells route the scan (partition-pruned to the probed
       cells) and int8 codes cover within-cell RESIDUALS; recall-gated
       like the other families.

@@ -7,9 +7,10 @@ corpus" a pretraining deployment actually runs: new documents arrive
 as INSERT envelopes carrying the vector, takedowns arrive as DELETE
 envelopes, and the serving index absorbs both without a rebuild.
 
-Works against any persisted index class with ``append`` + ``delete``
-(IvfIndex, LshIndex, Sq8Index, IvfSq8Index — the PQ classes are
-build-once encoders with no append path, so no sync either).
+Works against every persisted index kind (operators/vindex.py —
+IvfIndex, LshIndex, PqIndex, IvfPqIndex, Sq8Index, IvfSq8Index all
+share one append/delete/repair lifecycle; the PQ kinds append with
+their frozen codebooks).
 
 Semantics and crash discipline
 ------------------------------
@@ -52,7 +53,8 @@ Semantics and crash discipline
   :meth:`repair` anti-joins staged ids against the live corpus and
   re-appends exactly the missing ones. This is the same
   prefer-invisible-missing-over-wrong-duplicates discipline as
-  ``Sq8Index.append``'s raw-first ordering, extended to the stream.
+  the index append's raw-first ordering (operators/vindex.py),
+  extended to the stream.
 
 At 100 TB: per-batch cost is O(batch) — a tombstone append, a staging
 write, and the index's own partition-local append; nothing scans the
@@ -73,8 +75,9 @@ from timescale_cdc_spark.operators import tombstones as tb
 class IndexCdcSync:
     """Wire a CDC envelope stream into a persisted ANN index.
 
-    ``index``: any of IvfIndex/LshIndex/Sq8Index/IvfSq8Index (needs
-    ``append``, ``delete``, and one of ``corpus``/``raw``/``banded``).
+    ``index``: any persisted index kind (operators/vindex.py
+    VectorIndex — its ``append``, ``delete`` and ``vectors`` live
+    accessor).
     ``path``: sync state — ``<path>/staged/_batch_id=N`` (parsed
     insert rows) and ``<path>/applied/batch-N`` (markers).
     ``updates``: ``'reject'`` (default) or ``'split'`` — see the
@@ -342,16 +345,10 @@ class IndexCdcSync:
     # -- reconciliation (maintenance cadence) ------------------------------
 
     def _live_ids(self) -> DataFrame:
-        for acc in ("corpus", "raw", "banded"):
-            if hasattr(self.index, acc):
-                return (
-                    getattr(self.index, acc)()
-                    .select(F.col("c_id").alias(self.id_col))
-                    .distinct()
-                )
-        raise TypeError(
-            f"{type(self.index).__name__} exposes none of "
-            f"corpus()/raw()/banded()"
+        return (
+            self.index.vectors()
+            .select(F.col("c_id").alias(self.id_col))
+            .distinct()
         )
 
     def _sync_deleted(self) -> DataFrame | None:
