@@ -451,3 +451,71 @@ def test_fused_initial_cascade_matches_sequential(spark, tmp_path):
     assert qb.exceptAll(qa).count() == 0
     # incremental state must NOT take the fused path
     assert C._cascade_initial_fused([hf, df_], src, 0, end_s) is False
+
+
+def test_fused_path_not_reentered_after_empty_window_refresh(spark, hierarchy):
+    """ADVICE r16 (medium): a cascade over a window that holds no rows
+    commits version 1 and a watermark with no regions. The next
+    cascade is incremental — it must take the sequential path, bump
+    each level's version and never move a watermark backwards (the
+    fused initial-build path would commit version 1 and the new
+    window's end again)."""
+    levels, cascade, qh = hierarchy
+    hourly, daily = levels
+    src = spark.createDataFrame(
+        _hrows(1, [0, 5]) + _hrows(2, [3], key="b"), HSCHEMA
+    )
+    day_s = 86400
+    jan1 = int(dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc).timestamp())
+    jan10 = jan1 + 9 * day_s
+    cascade(levels, src, start_s=jan10, end_s=jan10 + day_s)
+    for cagg in levels:
+        m = cagg._load_manifest()
+        assert (m["version"], m["regions"], m["watermark_s"]) == (
+            1, {}, jan10 + day_s
+        )
+    cascade(levels, src, start_s=jan1, end_s=jan1 + 2 * day_s)
+    for cagg in levels:
+        m = cagg._load_manifest()
+        assert m["version"] == 2
+        assert m["watermark_s"] == jan10 + day_s
+        assert sorted(m["regions"]) == ["2024-01-01", "2024-01-02"]
+    assert _readable(qh(levels, src)) == _readable(_daily_direct(src))
+
+
+def test_fused_cascade_commits_each_level_with_its_own_types(spark, tmp_path):
+    """ADVICE r16 (medium): levels whose same-named columns differ in
+    type (hourly sum_v is decimal(28,2), the daily sum of it
+    decimal(38,2)) must each commit the types the sequential path
+    writes — staging both levels through one union would widen the
+    hourly level to decimal(38,2). The fused path also releases the
+    lower aggregate it shares between the two writes."""
+    from pyspark.sql import types as T
+
+    from timescale_cdc_spark.cdc import caggs as C
+
+    src = spark.createDataFrame(
+        _hrows(1, [0, 1, 5]) + _hrows(2, [3, 22, 23], key="b"), HSCHEMA
+    )
+
+    def mk(tag):
+        return [
+            ContinuousAggregate(spark, str(tmp_path / tag / "h"), "1 hour",
+                                "ts", ["k"], _hourly_partial_aggs),
+            ContinuousAggregate(spark, str(tmp_path / tag / "d"), "1 day",
+                                "bucket", ["k"], _daily_merge_aggs),
+        ]
+
+    end_s = 1704326400  # 2024-01-04T00:00Z
+    fused = mk("fused")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = persisted()
+    assert C._cascade_initial_fused(fused, src, 0, end_s) is True
+    assert persisted() == before
+    hs, ds = mk("seq")
+    hs.refresh(src, start_s=0, end_s=end_s)
+    ds.refresh(hs.materialized(), start_s=0, end_s=end_s)
+    for a, b in zip(fused, (hs, ds)):
+        assert a.materialized().dtypes == b.materialized().dtypes
+    assert fused[0].materialized().schema["sum_v"].dataType == T.DecimalType(28, 2)
+    assert fused[1].materialized().schema["sum_v"].dataType == T.DecimalType(38, 2)

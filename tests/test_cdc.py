@@ -599,6 +599,164 @@ def test_append_retry_replaces_partial_output(spark, tmp_path):
     assert log.last_event_id() == 3
 
 
+def _jobs_launched(spark, build) -> int:
+    """Spark jobs launched while ``build()`` runs, counted through a
+    job group. A one-task sentinel job runs in the same group, so a
+    group that is not tracked fails the count instead of reading 0."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "construction pin")
+    try:
+        build()
+        sc.parallelize([1], 1).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)) - 1
+
+
+def _seed_rows(n: int, name: str = "n") -> list:
+    return [(i, f"{name}{i}", f"S{i:04d}", T0, T0) for i in range(1, n + 1)]
+
+
+def test_append_event_ids_are_bigint_across_int32_boundary(spark, tmp_path):
+    """event_id is bigint (init.sql:48): a batch appended just below
+    2^31 gets dense ids past it instead of an int32 overflow, reads
+    back as LongType, and a log whose files hold int32 ids reads
+    through the declared schema widened to long."""
+    from pyspark.sql import types as T
+
+    log = EventLog(spark, str(tmp_path / "log"))
+    log._commit_watermark(2**31 - 10)
+    env = cdc_transform(_assets(spark, []), _assets(spark, _seed_rows(20)),
+                        "id", "dataschema", "assets", F.lit(T0))
+    assert log.append(env) == 20
+    assert log.append(env, distributed_ids=True) == 20
+    ids = sorted(r["event_id"] for r in log.read().collect())
+    assert ids == list(range(2**31 - 9, 2**31 + 31))
+    assert log.last_event_id() == 2**31 + 30
+    assert log.read().schema["event_id"].dataType == T.LongType()
+
+    old = EventLog(spark, str(tmp_path / "int32_log"))
+    part = f"{old.data_path}/event_date={T0.date().isoformat()}"
+    spark.createDataFrame(
+        [(T0, "dataschema", "assets", "INSERT", None, "{}", 7)],
+        "ts timestamp, schema_name string, table_name string, "
+        "operation string, before string, after string, event_id int",
+    ).write.parquet(part)
+    got = old.read().filter(F.col("event_id") == 7)
+    assert got.schema["event_id"].dataType == T.LongType()
+    assert [r["event_id"] for r in got.collect()] == [7]
+
+
+def test_empty_append_writes_nothing(spark, tmp_path):
+    """An empty batch returns 0, leaves no staged output and does not
+    touch the watermark, on both id paths."""
+    import os
+
+    log = EventLog(spark, str(tmp_path / "log"))
+    empty = cdc_transform(_assets(spark, SEED), _assets(spark, SEED),
+                          "id", "dataschema", "assets", F.lit(T0))
+    for distributed in (False, True):
+        assert log.append(empty, distributed_ids=distributed) == 0
+    assert log.last_event_id() == 0
+    assert not log.exists()
+    staging = os.path.join(log.path, "_staging")
+    assert not os.path.isdir(staging) or not os.listdir(staging)
+
+
+def test_append_keeps_session_serializable(spark, tmp_path):
+    """Counting an append must not leave state in the session that
+    Java serialization rejects: closures that capture the session
+    (Spark ML model UDFs) are serialized with it."""
+    log = EventLog(spark, str(tmp_path / "log"))
+    env = cdc_transform(_assets(spark, []), _assets(spark, SEED),
+                        "id", "dataschema", "assets", F.lit(T0))
+    assert log.append(env) == 3
+    jvm = spark._jvm
+    out = jvm.java.io.ObjectOutputStream(jvm.java.io.ByteArrayOutputStream())
+    out.writeObject(spark._jsparkSession)
+
+
+def test_engine_table_reads_launch_no_jobs(spark, tmp_path):
+    """EventLog.read() and ContinuousAggregate.materialized() scan
+    with declared/recorded schemas: building either frame over a
+    handful of partitions launches no Spark job (no schema
+    inference)."""
+    from timescale_cdc_spark.cdc.caggs import ContinuousAggregate
+
+    log = EventLog(spark, str(tmp_path / "log"))
+    for day in range(3):
+        ts = T0 + dt.timedelta(days=day)
+        log.append(cdc_transform(_assets(spark, []), _assets(spark, SEED),
+                                 "id", "dataschema", "assets", F.lit(ts)))
+    cagg = ContinuousAggregate(
+        spark, str(tmp_path / "cagg"), "1 hour", "ts", ["table_name"],
+        lambda: [F.count(F.lit(1)).alias("n")],
+    )
+    cagg.refresh(log.read())
+    assert len(cagg._load_manifest()["regions"]) == 3
+    assert _jobs_launched(spark, log.read) == 0
+    assert _jobs_launched(spark, cagg.materialized) == 0
+    assert cagg.materialized().count() == 3
+
+
+def test_apply_changes_commits_one_file_per_bucket(spark, log, tmp_path):
+    """The merge hash-partitions on the bucket before writing, so
+    every committed bucket version directory holds exactly one parquet
+    file — also when the rewritten buckets are read back from the
+    previous version and unioned with the batch."""
+    import os
+
+    from timescale_cdc_spark.cdc.materialize import MaterializedTable
+
+    mat = MaterializedTable(spark, str(tmp_path / "mat"), ASSETS_SCHEMA,
+                            "id", n_buckets=4)
+    # step 2 updates half the keys and keeps the rest, so every bucket
+    # is rebuilt from both its kept rows and the batch's upserts
+    states = [[], _seed_rows(200), _seed_rows(100, name="m") + _seed_rows(200)[100:]]
+    for i in range(1, len(states)):
+        ts = T0 + dt.timedelta(minutes=i)
+        log.append(cdc_transform(_assets(spark, states[i - 1]),
+                                 _assets(spark, states[i]),
+                                 "id", "dataschema", "assets", F.lit(ts)))
+        mat.apply_changes(log.read().filter(F.col("ts") == ts).repartition(3))
+        buckets = mat._load_manifest()["buckets"]
+        assert len(buckets) == 4
+        for b, v in buckets.items():
+            files = os.listdir(mat._bucket_dir(int(b), v))
+            assert sum(f.endswith(".parquet") for f in files) == 1, (b, files)
+    got = {(r["id"], r["name"]) for r in mat.read().collect()}
+    assert got == {(r[0], r[1]) for r in states[-1]}
+
+
+def test_append_and_apply_leave_no_persisted_rdds(spark, log, tmp_path):
+    """Long sessions keep no cached state: the distributed-ids persist
+    in append and the batch persist in apply_changes are released, so
+    the session's persistent RDD count is flat across repeated
+    append + apply_changes calls."""
+    from timescale_cdc_spark.cdc.materialize import MaterializedTable
+
+    jsc = spark.sparkContext._jsc
+    mat = MaterializedTable(spark, str(tmp_path / "mat"), ASSETS_SCHEMA,
+                            "id", n_buckets=4)
+    states = [[], SEED, SEED[:2], [(1, "Water Pump XL", "WP001", T0, T0)]]
+    before = jsc.getPersistentRDDs().size()
+    counts = []
+    for i in range(1, len(states)):
+        ts = T0 + dt.timedelta(minutes=i)
+        log.append(cdc_transform(_assets(spark, states[i - 1]),
+                                 _assets(spark, states[i]),
+                                 "id", "dataschema", "assets", F.lit(ts)),
+                   distributed_ids=i % 2 == 1)
+        mat.apply_changes(log.read().filter(F.col("ts") == ts))
+        counts.append(jsc.getPersistentRDDs().size())
+    assert counts == [before] * 3
+    assert {r["name"] for r in mat.read().collect()} == {"Water Pump XL"}
+
+
 def test_hourly_chunked_log(spark, tmp_path):
     """Hour chunking (Timescale chunk_time_interval parity,
     init.sql:69-70): nested event_hour partitions, hour-level partition

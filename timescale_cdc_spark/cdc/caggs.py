@@ -34,6 +34,12 @@ Spark-native design (no Delta in this environment):
   real-time aggregate. With a ts-partitioned source (the event log's
   ``event_date=`` chunks), the tail scan partition-prunes to the
   post-watermark chunks.
+* Every manifest commit records the level's stored parquet schema
+  under ``schema`` (``StructType.jsonValue()``); ``materialized()``
+  and the carried-region read of a partial-day refresh scan with it,
+  so building those frames infers nothing from the files. A manifest
+  written before the key existed has no ``schema``; its reads fall
+  back to inferring one from the files.
 
 100 TB shape: refresh cost is proportional to the refreshed window's
 source rows (one shuffle on (keys, bucket)); the materialized table is
@@ -56,6 +62,7 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from timescale_cdc_spark.functions.time import bucket_seconds
 
@@ -115,6 +122,14 @@ class ContinuousAggregate:
         """Epoch-second END of the highest refreshed bucket (None
         before the first refresh)."""
         return self._load_manifest().get("watermark_s")
+
+    def _read_regions(self, manifest: dict, paths: list[str]) -> DataFrame:
+        """Scan committed region directories with the schema the
+        manifest recorded (inferred from the files when it has none)."""
+        reader = self.spark.read
+        if "schema" in manifest:
+            reader = reader.schema(T.StructType.fromJson(manifest["schema"]))
+        return reader.parquet(*paths)
 
     # -- bucketing ----------------------------------------------------
 
@@ -206,7 +221,7 @@ class ContinuousAggregate:
         # carry that day's out-of-window buckets forward into the new
         # region version (otherwise they'd vanish with the superseded
         # directory). Cost stays O(touched day regions).
-        prev = self._load_manifest()["regions"]
+        prev = manifest["regions"]
         touched = [
             d for d in prev if self._day_in_window(d, start_s, end_s)
         ]
@@ -215,7 +230,7 @@ class ContinuousAggregate:
                 os.path.join(self.path, f"d={d}", prev[d]) for d in touched
             ]
             carried = (
-                self.spark.read.parquet(*old_paths)
+                self._read_regions(manifest, old_paths)
                 .filter(
                     (F.col("_eb") < F.lit(start_s))
                     | (F.col("_eb") >= F.lit(end_s))
@@ -268,6 +283,7 @@ class ContinuousAggregate:
                 # resolved paths just before this commit keeps every
                 # directory it captured
                 "history": prev_regions,
+                "schema": _stored_schema(agged),
             }
         )
         self._gc()
@@ -319,7 +335,7 @@ class ContinuousAggregate:
         ]
         if not paths:
             raise ValueError(f"continuous aggregate at {self.path} is empty")
-        return self.spark.read.parquet(*paths).drop("_d")
+        return self._read_regions(manifest, paths)
 
     # -- streaming refresh policy ------------------------------------
 
@@ -477,6 +493,12 @@ def cascade_refresh(
         prev = cagg
 
 
+def _stored_schema(staged: DataFrame) -> dict:
+    """The parquet schema of a level's committed files: the staged
+    frame minus its ``_d`` region partition column."""
+    return staged.drop("_d").schema.jsonValue()
+
+
 def _fused_kill_point(name: str) -> None:
     """Deterministic crash injection for the fused-commit soak
     (soak_cagg_fused.py): SIGKILL-equivalent exit when the env var
@@ -492,18 +514,21 @@ def _cascade_initial_fused(
     end_s: int,
 ) -> bool:
     """INITIAL-BUILD fast path for a two-level cascade (round 16,
-    VERDICT r15 #4): when both levels are FRESH (no committed
-    regions), the upper level's source-over-its-window is exactly the
-    lower level's just-computed aggregate — so instead of write →
-    commit → re-read-from-parquet → write → commit, both levels are
-    staged in ONE write job under ONE staging tree (the lower agg
-    lazily localCheckpoint'ed; both union branches read the same RDD,
-    so the write job computes it once), then renamed and committed
-    lower-level-first.
+    VERDICT r15 #4): when both levels are FRESH (never committed), the
+    upper level's source-over-its-window is exactly the lower level's
+    just-computed aggregate — so instead of write → commit →
+    re-read-from-parquet → write → commit, both levels are staged
+    under ONE staging tree from one persisted lower aggregate (the
+    lower write computes and caches it, the upper write reads the
+    cache, and it is released after both writes), then renamed and
+    committed lower-level-first. Each level is written by its own job,
+    so each keeps the column types its own aggregates produce —
+    exactly what the sequential path commits (a shared union would
+    widen both to a common type).
 
     Returns True when it handled the cascade; False = caller runs the
-    general sequential path (incremental refreshes, >2 levels,
-    mismatched level schemas, or a level that cannot be refreshed).
+    general sequential path (incremental refreshes, >2 levels, or a
+    level that cannot be refreshed).
 
     Crash-safety is the SAME contract as ``refresh``: nothing under
     ``d=<day>/v_...`` is visible until that level's single
@@ -512,32 +537,35 @@ def _cascade_initial_fused(
     GCs the orphans; a crash BETWEEN the two commits leaves the upper
     level un-refreshed — a legal cascade state (the upper level keeps
     serving those buckets from its real-time tail; the next cascade
-    completes it). The kill-window soak (soak_cagg.py --fused-kills)
-    drives a kill at every boundary and asserts query() equivalence.
+    completes it). The kill-window soak (soak_cagg_fused.py) drives a
+    kill at every boundary and asserts query() equivalence.
 
     What it saves: one full parquet re-read of the lower level's
-    partials per cascade (at 100 TB: |keys| × fine-buckets rows), one
-    Spark write job, and half the staging churn. Refresh semantics,
-    watermark arithmetic and committed bytes are identical — windows
-    are computed with the exact expressions the sequential loop uses,
-    and the oracle hash over the registered entry is unchanged.
+    partials per cascade (at 100 TB: |keys| × fine-buckets rows) and
+    one manifest round trip. Refresh semantics, watermark arithmetic
+    and committed bytes are identical — windows are computed with the
+    exact expressions the sequential loop uses, and the oracle hash
+    over the registered entry is unchanged.
     """
-    import os as _os
-
     if len(levels) != 2:
         return False
     lower, upper = levels
     # sequential-loop window arithmetic, replicated exactly
     if upper.secs % lower.secs != 0 or upper.ts_col != "bucket":
         return False  # let the general path raise its errors
-    if lower._load_manifest()["regions"] or upper._load_manifest()["regions"]:
+    # Fresh = never committed (version 0, no watermark). Empty regions
+    # are not enough: a refresh over an empty window commits a version
+    # and a watermark with no regions, which this path would reset.
+    if lower._load_manifest()["version"] or upper._load_manifest()["version"]:
         return False  # incremental refresh → general path
     lo0 = lower._align(start_s)
     hi0 = lower._align(end_s, up=True)
     if hi0 <= lo0:
         return True  # nothing to refresh anywhere (general path no-ops)
     lo1 = upper._align(lo0)
-    hi1 = min(upper._align(hi0, up=True), upper._align(hi0))
+    # the sequential loop's min(align_up(end), align_down(lower
+    # watermark)); on the fresh path the lower watermark is hi0
+    hi1 = upper._align(hi0)
     window = source.filter(
         (F.col(lower.ts_col) >= F.timestamp_seconds(F.lit(lo0)))
         & (F.col(lower.ts_col) < F.timestamp_seconds(F.lit(hi0)))
@@ -545,50 +573,51 @@ def _cascade_initial_fused(
     agg0 = (
         lower._aggregate(window)
         .withColumn("_d", F.to_date(F.timestamp_seconds("_eb")))
-        .localCheckpoint(eager=False)
+        .persist()
     )
-    agg1 = None
+    staged = [agg0]
     if hi1 > lo1:
         src1 = agg0.drop("_d").filter(
             (F.col(upper.ts_col) >= F.timestamp_seconds(F.lit(lo1)))
             & (F.col(upper.ts_col) < F.timestamp_seconds(F.lit(hi1)))
         )
-        agg1 = upper._aggregate(src1).withColumn(
-            "_d", F.to_date(F.timestamp_seconds("_eb"))
+        staged.append(
+            upper._aggregate(src1).withColumn(
+                "_d", F.to_date(F.timestamp_seconds("_eb"))
+            )
         )
-        if sorted(agg1.columns) != sorted(agg0.columns):
-            return False  # level schemas differ → sequential path
     vname = "v_000001"
-    staging = _os.path.join(lower.path, f"_staging_fused_{vname}")
-    union = agg0.withColumn("_lvl", F.lit(0))
-    if agg1 is not None:
-        union = union.unionByName(agg1.withColumn("_lvl", F.lit(1)))
+    staging = os.path.join(lower.path, f"_staging_fused_{vname}")
     _fused_kill_point("pre_write")
-    (
-        union.repartition("_lvl", "_d")
-        .write.mode("overwrite")
-        .partitionBy("_lvl", "_d")
-        .parquet(staging)
-    )
+    try:
+        for lvl, agg in enumerate(staged):
+            (
+                agg.repartition("_d")
+                .write.mode("overwrite")
+                .partitionBy("_d")
+                .parquet(os.path.join(staging, f"_lvl={lvl}"))
+            )
+    finally:
+        agg0.unpersist()
     _fused_kill_point("post_write")
     regions: list[dict[str, str]] = [{}, {}]
-    if _os.path.exists(staging):
+    if os.path.exists(staging):
         first_rename = True
-        for lname in sorted(_os.listdir(staging)):
+        for lname in sorted(os.listdir(staging)):
             if not lname.startswith("_lvl="):
                 continue
             lvl = int(lname[len("_lvl="):])
             cagg = levels[lvl]
-            ldir = _os.path.join(staging, lname)
-            for dname in sorted(_os.listdir(ldir)):
+            ldir = os.path.join(staging, lname)
+            for dname in sorted(os.listdir(ldir)):
                 if not dname.startswith("_d="):
                     continue
                 day = dname[len("_d="):]
-                dest = _os.path.join(cagg.path, f"d={day}", vname)
-                _os.makedirs(_os.path.dirname(dest), exist_ok=True)
-                if _os.path.exists(dest):
+                dest = os.path.join(cagg.path, f"d={day}", vname)
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                if os.path.exists(dest):
                     shutil.rmtree(dest)
-                _os.rename(_os.path.join(ldir, dname), dest)
+                os.rename(os.path.join(ldir, dname), dest)
                 regions[lvl][day] = vname
                 if first_rename:
                     first_rename = False
@@ -599,14 +628,14 @@ def _cascade_initial_fused(
     # claims a watermark its lower level has not reached)
     lower._commit_manifest(
         {"version": 1, "watermark_s": hi0, "regions": regions[0],
-         "history": {}}
+         "history": {}, "schema": _stored_schema(agg0)}
     )
     lower._gc()
     _fused_kill_point("between_commits")
     if hi1 > lo1:
         upper._commit_manifest(
             {"version": 1, "watermark_s": hi1, "regions": regions[1],
-             "history": {}}
+             "history": {}, "schema": _stored_schema(staged[1])}
         )
         upper._gc()
     return True

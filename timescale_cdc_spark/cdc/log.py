@@ -27,14 +27,17 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from timescale_cdc_spark.schemas import EVENT_LOG_SCHEMA
 
 _WATERMARK_FILE = "_event_id_watermark.json"
 ENVELOPE_COLS = [f.name for f in EVENT_LOG_SCHEMA.fields]
+_PARTITION_TYPES = {"event_date": T.DateType(), "event_hour": T.IntegerType()}
 
 
 class EventLog:
@@ -61,6 +64,11 @@ class EventLog:
         self.chunk = chunk
         self.partition_cols = self.CHUNKS[chunk]
         self.data_path = os.path.join(path, "data")
+        #: the declared schema of every read: envelope + partition columns
+        self.schema = T.StructType(
+            list(EVENT_LOG_SCHEMA.fields)
+            + [T.StructField(c, _PARTITION_TYPES[c]) for c in self.partition_cols]
+        )
         os.makedirs(self.path, exist_ok=True)
 
     # -- event_id watermark (the "sequence" state) --------------------------
@@ -111,30 +119,36 @@ class EventLog:
         per-partition (not global) sort. Ids stay dense and gap-free;
         (ts, event_id) remains a valid total order for polling, but id
         order no longer globally tracks ts order across partitions.
+
+        The batch is evaluated by the staged write alone: the row count
+        is read from the staged files' parquet footers, not taken in a
+        separate pass. (``DataFrame.observe`` would also count without a
+        pass, but an ``Observation`` leaves the session holding a
+        non-serializable manager, which breaks later closures that
+        capture the session, e.g. Spark ML model UDFs.) An empty batch
+        drops its staging directory and returns 0 without touching the
+        watermark. The distributed path runs two actions over the batch
+        (per-partition counts, then the write), so it persists the batch
+        for their duration.
         """
         tiebreak = tiebreak or ["schema_name", "table_name", "operation"]
         start = self.last_event_id()
-        # Persist the batch so the count action and the write action
-        # see the same rows (no recompute between them), and the id
-        # window is evaluated once.
-        envelope = envelope.persist()
+        staging = os.path.join(self.path, "_staging", f"batch_{start}")
+        if distributed_ids:
+            envelope = envelope.persist()
         try:
-            n = envelope.count()
-            if n == 0:
-                return 0
             if distributed_ids:
                 with_ids = self._assign_ids_distributed(envelope, start, tiebreak)
             else:
                 w = Window.orderBy("ts", *tiebreak)
                 with_ids = envelope.withColumn(
-                    "event_id", F.row_number().over(w) + F.lit(start)
+                    "event_id", F.lit(start).cast("long") + F.row_number().over(w)
                 )
             with_ids = with_ids.withColumn("event_date", F.to_date("ts"))
             if self.chunk == "hour":
                 with_ids = with_ids.withColumn(
                     "event_hour", F.hour("ts").cast("int")
                 )
-            staging = os.path.join(self.path, "_staging", f"batch_{start}")
             (
                 with_ids.select(*ENVELOPE_COLS, *self.partition_cols)
                 .sortWithinPartitions("schema_name", "table_name", "ts", "event_id")
@@ -142,9 +156,14 @@ class EventLog:
                 .partitionBy(*self.partition_cols)
                 .parquet(staging)
             )
+            n = _staged_rows(staging)
+            if n == 0:
+                shutil.rmtree(staging, ignore_errors=True)
+                return 0
             self._publish_staged_batch(staging, start)
         finally:
-            envelope.unpersist()
+            if distributed_ids:
+                envelope.unpersist()
         self._commit_watermark(start + n)
         return n
 
@@ -181,8 +200,6 @@ class EventLog:
                     os.path.join(ddir, f"{tag}{i:05d}.parquet"),
                 )
                 i += 1
-        import shutil
-
         shutil.rmtree(staging, ignore_errors=True)
 
     def _assign_ids_distributed(
@@ -203,9 +220,11 @@ class EventLog:
         for row in sorted(counts, key=lambda r: r["_pid"]):
             base[row["_pid"]] = acc
             acc += row["count"]
+        # Typed bigint offsets keep event_id a long (and an empty batch's
+        # map resolvable).
         base_map = F.create_map(
             *[F.lit(x) for pid, off in sorted(base.items()) for x in (pid, off)]
-        )
+        ).cast("map<int,bigint>")
         w = Window.partitionBy("_pid").orderBy("ts", *tiebreak)
         return (
             tagged.withColumn(
@@ -220,8 +239,10 @@ class EventLog:
     def read(self) -> DataFrame:
         """Full log scan (readme.md:119-121's SELECT * equivalent).
         event_date partition pruning applies to any ts/event_date
-        filter layered on top."""
-        return self.spark.read.parquet(self.data_path)
+        filter layered on top. The scan uses the declared
+        :attr:`schema`, so building it infers nothing from the files
+        (files written with an int32 ``event_id`` read back widened)."""
+        return self.spark.read.schema(self.schema).parquet(self.data_path)
 
     def read_table(self, schema_name: str, table_name: str) -> DataFrame:
         """Per-table slice — the event_log_assets view shape
@@ -235,3 +256,16 @@ class EventLog:
         return os.path.isdir(self.data_path) and any(
             name.startswith("event_date=") for name in os.listdir(self.data_path)
         )
+
+
+def _staged_rows(staging: str) -> int:
+    """Rows in a staged write, summed from its parquet footers
+    (driver-side metadata; no Spark job, no data pages read)."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(root, name)).num_rows
+        for root, _dirs, files in os.walk(staging)
+        for name in files
+        if name.endswith(".parquet")
+    )

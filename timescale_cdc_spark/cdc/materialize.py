@@ -43,9 +43,13 @@ silently returning a smaller table). Writers are still
 single-threaded per table (the reference's connector is a single task
 per relation, cdc-timescale-connector.json:8).
 
-Scale: the merge is one anti-join + union over ONLY the touched
-buckets; both sides shuffle on the PK once, and because the stored
-layout is already PK-bucketed the anti-join is hash-local per bucket.
+Scale: the batch is evaluated once — its last event per key, with the
+key and bucket projected, is persisted and feeds the touched-bucket
+collect, the anti-join keys and the upserts, then is released. The
+merge is one anti-join + union over ONLY the touched buckets, hash-
+partitioned on the bucket before the write, so each committed version
+directory holds one file per bucket (readers open n_buckets files, not
+writer tasks × buckets).
 """
 
 from __future__ import annotations
@@ -163,28 +167,39 @@ class MaterializedTable:
             F.get_json_object("after", f"$.{self.pk}"),
             F.get_json_object("before", f"$.{self.pk}"),
         )
-        w = Window.partitionBy(key).orderBy(F.desc("ts"), F.desc("event_id"))
+        w = Window.partitionBy("_k").orderBy(F.desc("ts"), F.desc("event_id"))
+        # The batch is evaluated ONCE: its last event per key, with the
+        # key and its bucket projected, is persisted and every later
+        # step (touched buckets, anti-join keys, upserts) reads it.
         last = (
-            envelope_batch.withColumn("_rn", F.row_number().over(w))
+            envelope_batch.withColumn("_k", key)
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
+            .select(
+                "_k",
+                self._bucket_expr(F.col("_k")).alias("_b"),
+                "operation",
+                "after",
+            )
+            .persist()
         )
+        try:
+            touched_buckets = sorted(
+                r["_b"] for r in last.select("_b").distinct().collect()
+            )
+            if touched_buckets:
+                self._merge(last, touched_buckets)
+        finally:
+            last.unpersist()
+
+    def _merge(self, last: DataFrame, touched_buckets: list[int]) -> None:
+        """Rewrite ``touched_buckets`` from their current rows minus the
+        batch's keys plus its upserts, then commit one manifest."""
         upserts = (
             last.filter(F.col("operation") != "DELETE")
             .select(F.from_json("after", self.row_schema).alias("r"))
             .select("r.*")
         )
-        touched_keys = last.select(key.cast("string").alias("_k")).distinct()
-        touched_buckets = sorted(
-            r["_b"]
-            for r in touched_keys.select(
-                self._bucket_expr(F.col("_k")).alias("_b")
-            )
-            .distinct()
-            .collect()
-        )
-        if not touched_buckets:
-            return
-
         manifest = self._load_manifest()
         new_version = f"v_{manifest['version'] + 1:06d}"
 
@@ -200,16 +215,23 @@ class MaterializedTable:
             target = self.spark.createDataFrame([], schema=self.row_schema)
 
         untouched = target.join(
-            touched_keys,
-            target[self.pk].cast("string") == touched_keys["_k"],
+            last,
+            target[self.pk].cast("string") == last["_k"],
             "left_anti",
         )
         merged = untouched.unionByName(upserts).withColumn(
             "_bucket", self._bucket_expr(F.col(self.pk))
         )
 
+        # Hash-partitioning on the bucket first gives each bucket ONE
+        # writer task, so each version directory holds one file.
         staging = os.path.join(self.path, f"_staging_{new_version}")
-        merged.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
+        (
+            merged.repartition("_bucket")
+            .write.mode("overwrite")
+            .partitionBy("_bucket")
+            .parquet(staging)
+        )
 
         new_buckets = dict(manifest["buckets"])
         for b in touched_buckets:

@@ -32,22 +32,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from timescale_cdc_spark.cdc.log import ENVELOPE_COLS, EventLog
-from timescale_cdc_spark.schemas import EVENT_LOG_SCHEMA
 
 
 def stream_event_log(spark: SparkSession, log: EventLog) -> DataFrame:
     """B41 micro-batch incremental source: the event log as a stream.
     File-source offsets (checkpointed) make the log a replayable
     stream exactly as readme.md:214-220 describes the table."""
-    # Copy — StructType.add would mutate the shared schema in place.
-    from pyspark.sql import types as T
-
-    partition_fields = [T.StructField("event_date", T.DateType())]
-    if log.chunk == "hour":
-        partition_fields.append(T.StructField("event_hour", T.IntegerType()))
-    schema = T.StructType(list(EVENT_LOG_SCHEMA.fields) + partition_fields)
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(log.schema)
         .option("maxFilesPerTrigger", 64)
         .parquet(log.data_path)
     )
