@@ -404,62 +404,13 @@ def test_align_down_up_public_helpers(spark, tmp_path):
     assert day.align_down(1704844800) == 1704844800
 
 
-def test_fused_initial_cascade_matches_sequential(spark, tmp_path):
-    """Round 16 (VERDICT r15 #4): the fused single-staging-tree
-    initial cascade commit must be byte-for-byte equivalent to the
-    sequential write->commit->re-read->write path — same materialized
-    rows, same manifest watermarks/regions, same real-time view — and
-    must actually ENGAGE on fresh two-level hierarchies (returns
-    True), while incremental refreshes fall back (returns False).
-    Crash windows are covered by soak_cagg_fused.py (5 kill points,
-    all green; SCALE.md)."""
-    from timescale_cdc_spark.cdc import caggs as C
-
-    src = spark.createDataFrame(
-        _hrows(1, [0, 1, 5]) + _hrows(2, [3, 22, 23], key="b"), HSCHEMA
-    )
-
-    def mk(tag):
-        hour = ContinuousAggregate(
-            spark, str(tmp_path / tag / "h"), "1 hour", "ts", ["k"],
-            _hourly_partial_aggs,
-        )
-        day = ContinuousAggregate(
-            spark, str(tmp_path / tag / "d"), "1 day", "bucket", ["k"],
-            _daily_merge_aggs,
-        )
-        return hour, day
-
-    end_s = 1704326400  # 2024-01-04T00:00Z — covers both data days
-    hf, df_ = mk("fused")
-    assert C._cascade_initial_fused([hf, df_], src, 0, end_s) is True
-    hs, ds = mk("seq")
-    hs.refresh(src, start_s=0, end_s=end_s)
-    ds.refresh(hs.materialized(), start_s=0, end_s=end_s)
-    for a, b in ((hf, hs), (df_, ds)):
-        assert a.watermark_s() == b.watermark_s()
-        ma = a._load_manifest()
-        mb = b._load_manifest()
-        assert sorted(ma["regions"]) == sorted(mb["regions"])
-        da, db = a.materialized(), b.materialized()
-        assert da.exceptAll(db).count() == 0
-        assert db.exceptAll(da).count() == 0
-    # real-time hierarchy view identical
-    qa = df_.query(hf.query(src))
-    qb = ds.query(hs.query(src))
-    assert qa.exceptAll(qb).count() == 0
-    assert qb.exceptAll(qa).count() == 0
-    # incremental state must NOT take the fused path
-    assert C._cascade_initial_fused([hf, df_], src, 0, end_s) is False
-
-
-def test_fused_path_not_reentered_after_empty_window_refresh(spark, hierarchy):
+def test_cascade_after_empty_window_refresh_keeps_versions_and_watermarks(
+    spark, hierarchy
+):
     """ADVICE r16 (medium): a cascade over a window that holds no rows
     commits version 1 and a watermark with no regions. The next
-    cascade is incremental — it must take the sequential path, bump
-    each level's version and never move a watermark backwards (the
-    fused initial-build path would commit version 1 and the new
-    window's end again)."""
+    cascade must bump each level's version and never move a watermark
+    backwards."""
     levels, cascade, qh = hierarchy
     hourly, daily = levels
     src = spark.createDataFrame(
@@ -470,52 +421,105 @@ def test_fused_path_not_reentered_after_empty_window_refresh(spark, hierarchy):
     jan10 = jan1 + 9 * day_s
     cascade(levels, src, start_s=jan10, end_s=jan10 + day_s)
     for cagg in levels:
-        m = cagg._load_manifest()
+        m = cagg.store.load()
         assert (m["version"], m["regions"], m["watermark_s"]) == (
             1, {}, jan10 + day_s
         )
     cascade(levels, src, start_s=jan1, end_s=jan1 + 2 * day_s)
     for cagg in levels:
-        m = cagg._load_manifest()
+        m = cagg.store.load()
         assert m["version"] == 2
         assert m["watermark_s"] == jan10 + day_s
         assert sorted(m["regions"]) == ["2024-01-01", "2024-01-02"]
     assert _readable(qh(levels, src)) == _readable(_daily_direct(src))
 
 
-def test_fused_cascade_commits_each_level_with_its_own_types(spark, tmp_path):
+def _two_levels(spark, root):
+    return [
+        ContinuousAggregate(spark, str(root / "h"), "1 hour", "ts", ["k"],
+                            _hourly_partial_aggs),
+        ContinuousAggregate(spark, str(root / "d"), "1 day", "bucket", ["k"],
+                            _daily_merge_aggs),
+    ]
+
+
+def test_cascade_commits_each_level_with_its_own_types(spark, tmp_path):
     """ADVICE r16 (medium): levels whose same-named columns differ in
     type (hourly sum_v is decimal(28,2), the daily sum of it
-    decimal(38,2)) must each commit the types the sequential path
-    writes — staging both levels through one union would widen the
-    hourly level to decimal(38,2). The fused path also releases the
-    lower aggregate it shares between the two writes."""
+    decimal(38,2)) each commit the types their own aggregates produce,
+    and a cascade leaves no persisted RDD behind."""
     from pyspark.sql import types as T
 
-    from timescale_cdc_spark.cdc import caggs as C
+    from timescale_cdc_spark.cdc.caggs import cascade_refresh
 
     src = spark.createDataFrame(
         _hrows(1, [0, 1, 5]) + _hrows(2, [3, 22, 23], key="b"), HSCHEMA
     )
-
-    def mk(tag):
-        return [
-            ContinuousAggregate(spark, str(tmp_path / tag / "h"), "1 hour",
-                                "ts", ["k"], _hourly_partial_aggs),
-            ContinuousAggregate(spark, str(tmp_path / tag / "d"), "1 day",
-                                "bucket", ["k"], _daily_merge_aggs),
-        ]
-
-    end_s = 1704326400  # 2024-01-04T00:00Z
-    fused = mk("fused")
+    levels = _two_levels(spark, tmp_path)
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size
     before = persisted()
-    assert C._cascade_initial_fused(fused, src, 0, end_s) is True
+    cascade_refresh(levels, src, start_s=0, end_s=1704326400)
     assert persisted() == before
-    hs, ds = mk("seq")
-    hs.refresh(src, start_s=0, end_s=end_s)
-    ds.refresh(hs.materialized(), start_s=0, end_s=end_s)
-    for a, b in zip(fused, (hs, ds)):
-        assert a.materialized().dtypes == b.materialized().dtypes
-    assert fused[0].materialized().schema["sum_v"].dataType == T.DecimalType(28, 2)
-    assert fused[1].materialized().schema["sum_v"].dataType == T.DecimalType(38, 2)
+    assert levels[0].materialized().schema["sum_v"].dataType == T.DecimalType(28, 2)
+    assert levels[1].materialized().schema["sum_v"].dataType == T.DecimalType(38, 2)
+
+
+def test_cascade_crash_between_level_commits_recovers(spark, tmp_path):
+    """A cascade that dies after the lower level committed and before
+    the upper one did leaves a legal state: the upper level serves
+    those buckets from its real-time tail, so the hierarchy view stays
+    exact, and the next cascade reaches the never-crashed state."""
+    from timescale_cdc_spark.cdc.caggs import cascade_refresh, query_hierarchy
+
+    src = spark.createDataFrame(
+        _hrows(1, [0, 1, 5]) + _hrows(2, [3, 22, 23], key="b"), HSCHEMA
+    )
+    end_s = 1704326400  # 2024-01-04T00:00Z
+    crashed = _two_levels(spark, tmp_path / "crashed")
+    upper = crashed[1]
+
+    def crash_once(*args, **kwargs):
+        del upper.refresh  # the retry runs the real refresh
+        raise RuntimeError("killed between the level commits")
+
+    upper.refresh = crash_once
+    with pytest.raises(RuntimeError):
+        cascade_refresh(crashed, src, start_s=0, end_s=end_s)
+    assert crashed[0].watermark_s() == end_s and not upper.exists()
+    assert _readable(query_hierarchy(crashed, src)) == _readable(_daily_direct(src))
+
+    cascade_refresh(crashed, src, start_s=0, end_s=end_s)
+    control = _two_levels(spark, tmp_path / "control")
+    cascade_refresh(control, src, start_s=0, end_s=end_s)
+    for a, b in zip(crashed, control):
+        assert a.watermark_s() == b.watermark_s()
+        assert sorted(a.store.load()["regions"]) == sorted(b.store.load()["regions"])
+        assert _readable(a.materialized()) == _readable(b.materialized())
+    assert _readable(query_hierarchy(crashed, src)) == _readable(_daily_direct(src))
+
+
+def test_reads_parent_format_manifest_history(spark, cagg):
+    """A manifest written before the store kept ``history`` as a list
+    holds the previous generation's region map as a dict. It is read
+    as one retained generation: the next refresh keeps that
+    generation's directories until they are superseded twice."""
+    src = spark.createDataFrame(_rows(1, [0, 1]), SCHEMA)
+    cagg.refresh(src)
+    cagg.refresh(src)
+    mpath = os.path.join(cagg.path, "_MANIFEST.json")
+    man = json.load(open(mpath))
+    man["history"] = {"2024-01-01": "v_000001"}
+    with open(mpath, "w") as f:
+        json.dump(man, f)
+    assert cagg.store.load()["history"] == [
+        {"version": 1, "regions": {"2024-01-01": "v_000001"}}
+    ]
+    cagg.store.gc()
+    ddir = os.path.join(cagg.path, "d=2024-01-01")
+    assert sorted(os.listdir(ddir)) == ["v_000001", "v_000002"]
+    cagg.refresh(src)
+    assert sorted(os.listdir(ddir)) == ["v_000002", "v_000003"]
+    assert json.load(open(mpath))["history"] == [
+        {"version": 2, "regions": {"2024-01-01": "v_000002"}}
+    ]
+    assert _sorted_rows(cagg.query(src)) == _sorted_rows(_full(src))

@@ -425,9 +425,9 @@ def test_materialized_table_adopts_stored_bucket_count(spark, log, tmp_path):
 def test_materialized_table_snapshot_survives_concurrent_writer(spark, log, tmp_path):
     """Round-4 VERDICT #3: a reader that resolved its paths from
     manifest generation G must still be able to scan after a writer
-    commits G+1 and runs _gc — retain_generations keeps the trailing
+    commits G+1 and runs its gc — retain_generations keeps the trailing
     window of version dirs. Beyond the window, dirs ARE reclaimed and
-    a too-stale manifest fails loudly via _current_paths."""
+    a too-stale manifest fails loudly when its paths are resolved."""
     from timescale_cdc_spark.cdc.materialize import MaterializedTable
 
     path = str(tmp_path / "mat")
@@ -453,7 +453,7 @@ def test_materialized_table_snapshot_survives_concurrent_writer(spark, log, tmp_
     apply_step(1)
     # Reader pins its snapshot: concrete G1 paths resolved NOW.
     reader_df = mat.read()
-    g1_manifest = mat._load_manifest()
+    g1_manifest = mat.store.load()
 
     apply_step(2)  # writer commits G2 and gcs
     # The pinned G1 scan must still succeed and see the G1 state.
@@ -467,7 +467,7 @@ def test_materialized_table_snapshot_survives_concurrent_writer(spark, log, tmp_
     # still holding the G1 manifest fails loudly, not with a silently
     # smaller table.
     with pytest.raises(FileNotFoundError):
-        mat._current_paths(g1_manifest)
+        mat.store.paths(g1_manifest)
     # The live table is unaffected.
     live = {(r["id"], r["name"]) for r in mat.read().collect()}
     assert live == {(r[0], r[1]) for r in states[4]}
@@ -523,7 +523,7 @@ def test_materialized_table_cold_bucket_supersession_expiry(spark, log, tmp_path
     # Reader pins the gen-4 snapshot: cold bucket still at its gen-1
     # dir (current since creation), hot bucket at gen 4.
     reader_df = mat.read()
-    g4_manifest = mat._load_manifest()
+    g4_manifest = mat.store.load()
     assert g4_manifest["version"] == 4
 
     apply_step(5)  # supersedes the cold bucket's gen-1 dir
@@ -534,7 +534,7 @@ def test_materialized_table_cold_bucket_supersession_expiry(spark, log, tmp_path
 
     apply_step(6)  # now gen 4 is two generations stale — out of window
     with pytest.raises(FileNotFoundError):
-        mat._current_paths(g4_manifest)
+        mat.store.paths(g4_manifest)
     live = {(r["id"], r["name"]) for r in mat.read().collect()}
     assert live == {(cold_id, "Cold v2"), (hot_id, "Hot v6")}
 
@@ -542,8 +542,8 @@ def test_materialized_table_cold_bucket_supersession_expiry(spark, log, tmp_path
 def test_materialized_table_recovers_orphan_version_dirs(spark, log, tmp_path):
     """A crash BETWEEN the bucket-rename loop and the manifest commit
     leaves version dirs the manifest never references, named exactly
-    like the next writer's rename target. The pre-apply _gc must
-    reclaim them or os.rename collides."""
+    like the next writer's rename target. The next commit must replace
+    or reclaim them, or os.rename collides."""
     import os as _os
 
     from timescale_cdc_spark.cdc.materialize import MaterializedTable
@@ -697,7 +697,7 @@ def test_engine_table_reads_launch_no_jobs(spark, tmp_path):
         lambda: [F.count(F.lit(1)).alias("n")],
     )
     cagg.refresh(log.read())
-    assert len(cagg._load_manifest()["regions"]) == 3
+    assert len(cagg.store.load()["regions"]) == 3
     assert _jobs_launched(spark, log.read) == 0
     assert _jobs_launched(spark, cagg.materialized) == 0
     assert cagg.materialized().count() == 3
@@ -723,10 +723,10 @@ def test_apply_changes_commits_one_file_per_bucket(spark, log, tmp_path):
                                  _assets(spark, states[i]),
                                  "id", "dataschema", "assets", F.lit(ts)))
         mat.apply_changes(log.read().filter(F.col("ts") == ts).repartition(3))
-        buckets = mat._load_manifest()["buckets"]
+        buckets = mat.store.load()["buckets"]
         assert len(buckets) == 4
         for b, v in buckets.items():
-            files = os.listdir(mat._bucket_dir(int(b), v))
+            files = os.listdir(mat.store.part_dir(b, v))
             assert sum(f.endswith(".parquet") for f in files) == 1, (b, files)
     got = {(r["id"], r["name"]) for r in mat.read().collect()}
     assert got == {(r[0], r[1]) for r in states[-1]}
@@ -1190,3 +1190,54 @@ def test_compress_zorder_undefined_bounds_falls_back(spark, log):
     assert stats["rows"] == 0
     assert "layout" not in stats  # plain rewrite, no z report fields
     assert read_layout(part) is None
+
+
+def test_json_commit_never_leaves_a_partial_file(tmp_path, monkeypatch):
+    """write_json_atomic, which every manifest, watermark, offset and
+    meta writer uses: a dump that dies mid-write leaves the previous
+    content (or no file) and no temp file, so the bandstore readers
+    never meet a truncated _meta.json — a missing gen meta reads as
+    unpruned, a batch meta keeps its last committed size."""
+    import os
+
+    from timescale_cdc_spark.cdc import store
+    from timescale_cdc_spark.operators.bandstore import BandedIndexStore
+
+    bands = BandedIndexStore()
+    bands.index_path = str(tmp_path)
+    batch = tmp_path / "ingest_batch=0"
+    gen = tmp_path / "_base" / "gen=1"
+    os.makedirs(batch)
+    os.makedirs(gen)
+    bands._write_batch_meta(0, 5)
+
+    def torn_dump(obj, f):
+        f.write('{"batch_do')
+        raise OSError("killed mid-dump")
+
+    monkeypatch.setattr(store.json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        bands._write_batch_meta(0, 7)
+    with pytest.raises(OSError):
+        store.write_json_atomic(str(gen / "_meta.json"), {"prefix_mod": 4})
+    monkeypatch.undo()
+    assert bands._batch_sizes() == [5.0]
+    assert bands._gen_meta("gen=1") == {}
+    assert os.listdir(batch) == ["_meta.json"]
+    assert os.listdir(gen) == []
+
+
+def test_driver_memory_default_is_half_available():
+    """The default driver heap (when SPARK_DRIVER_MEMORY is unset) is
+    half of MemAvailable in whole GiB, at least 1g."""
+    from timescale_cdc_spark.session import driver_memory
+
+    meminfo = (
+        "MemTotal:       16479424 kB\n"
+        "MemFree:        14719984 kB\n"
+        "MemAvailable:   15960228 kB\n"
+    )
+    assert driver_memory(meminfo) == "7g"
+    assert driver_memory("MemAvailable:    4194304 kB\n") == "2g"
+    assert driver_memory("MemAvailable:    1048576 kB\n") == "1g"
+    assert driver_memory("MemTotal:       16479424 kB\n") == "1g"

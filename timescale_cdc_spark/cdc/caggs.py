@@ -12,15 +12,13 @@ expensive aggregation work is amortized into refreshes.
 
 Spark-native design (no Delta in this environment):
 
-* Storage is day-regioned versioned directories behind an atomically
-  replaced JSON manifest — the same crash-safety scheme as
-  cdc/materialize.py: a refresh writes NEW ``d=<date>/v_<gen>``
-  directories (invisible to readers), then one ``os.replace`` commits
-  the manifest; a crash at any point leaves the previous manifest
-  pointing at intact data, and the next refresh garbage-collects
-  orphans. The trailing manifest generation is retained so a reader
-  that resolved paths just before a concurrent commit still sees
-  every directory it captured.
+* Storage is day regions stored as versioned directories behind one
+  manifest (``_MANIFEST.json`` maps ``regions`` to ``d=<day>/v_<gen>``
+  directories). The commit protocol — staging, rename, one atomic
+  manifest replace, retained-history GC — is cdc/store.py's: a refresh
+  is all-or-nothing across a crash at any point, and the previous
+  generation is retained so a reader that resolved paths just before a
+  concurrent commit still sees every directory it captured.
 * ``refresh(source, start, end)`` recomputes WHOLE buckets inside the
   bucket-aligned window from the source (Timescale semantics:
   ``refresh_continuous_aggregate`` recomputes the window, it does not
@@ -55,18 +53,14 @@ relation connector (cdc-timescale-connector.json:12).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
+import datetime as dt
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from timescale_cdc_spark.cdc.store import VersionedStore
 from timescale_cdc_spark.functions.time import bucket_seconds
-
-_MANIFEST = "_MANIFEST.json"
 
 #: signature: () -> list[Column] — fresh aggregate Columns per plan
 AggBuilder = Callable[[], list[Column]]
@@ -92,44 +86,16 @@ class ContinuousAggregate:
         self.ts_col = ts_col
         self.key_cols = list(key_cols)
         self.agg_builder = agg_builder
-        os.makedirs(path, exist_ok=True)
-
-    # -- manifest -----------------------------------------------------
-
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, _MANIFEST)
-
-    def _load_manifest(self) -> dict:
-        try:
-            with open(self._manifest_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"version": 0, "watermark_s": None, "regions": {},
-                    "history": {}}
-
-    def _commit_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path())
+        # current + previous generation
+        self.store = VersionedStore(path, "regions", "d=", retain_generations=2)
 
     def exists(self) -> bool:
-        return os.path.exists(self._manifest_path())
+        return self.store.load()["version"] > 0
 
     def watermark_s(self) -> int | None:
         """Epoch-second END of the highest refreshed bucket (None
         before the first refresh)."""
-        return self._load_manifest().get("watermark_s")
-
-    def _read_regions(self, manifest: dict, paths: list[str]) -> DataFrame:
-        """Scan committed region directories with the schema the
-        manifest recorded (inferred from the files when it has none)."""
-        reader = self.spark.read
-        if "schema" in manifest:
-            reader = reader.schema(T.StructType.fromJson(manifest["schema"]))
-        return reader.parquet(*paths)
+        return self.store.load().get("watermark_s")
 
     # -- bucketing ----------------------------------------------------
 
@@ -205,10 +171,7 @@ class ContinuousAggregate:
         if end_s <= start_s:
             return
 
-        manifest = self._load_manifest()
-        gen = manifest["version"] + 1
-        vname = f"v_{gen:06d}"
-
+        manifest = self.store.load()
         window = source.filter(
             (F.col(self.ts_col) >= F.timestamp_seconds(F.lit(start_s)))
             & (F.col(self.ts_col) < F.timestamp_seconds(F.lit(end_s)))
@@ -221,16 +184,13 @@ class ContinuousAggregate:
         # carry that day's out-of-window buckets forward into the new
         # region version (otherwise they'd vanish with the superseded
         # directory). Cost stays O(touched day regions).
-        prev = manifest["regions"]
         touched = [
-            d for d in prev if self._day_in_window(d, start_s, end_s)
+            d for d in manifest["regions"]
+            if self._day_in_window(d, start_s, end_s)
         ]
         if touched:
-            old_paths = [
-                os.path.join(self.path, f"d={d}", prev[d]) for d in touched
-            ]
             carried = (
-                self._read_regions(manifest, old_paths)
+                self.store.read(self.spark, manifest, touched)
                 .filter(
                     (F.col("_eb") < F.lit(start_s))
                     | (F.col("_eb") >= F.lit(end_s))
@@ -238,59 +198,18 @@ class ContinuousAggregate:
                 .withColumn("_d", F.to_date(F.timestamp_seconds("_eb")))
             )
             agged = agged.unionByName(carried)
-        staging = os.path.join(self.path, f"_staging_{vname}")
-        (
-            agged.repartition("_d")
-            .write.mode("overwrite")
-            .partitionBy("_d")
-            .parquet(staging)
-        )
-
-        # Move each staged day region to its committed location. Days
-        # inside the window with NO staged output (all their rows
+        # Days inside the window with no staged output (all their rows
         # deleted / none existed) drop out of the manifest.
-        prev_regions = dict(manifest["regions"])
-        new_regions = {
-            d: v
-            for d, v in prev_regions.items()
-            if not self._day_in_window(d, start_s, end_s)
-        }
-        if os.path.exists(staging):
-            for name in sorted(os.listdir(staging)):
-                if not name.startswith("_d="):
-                    continue
-                day = name[len("_d="):]
-                dest = os.path.join(self.path, f"d={day}", vname)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                # A refresh that crashed between this rename and the
-                # manifest commit leaves an UNCOMMITTED dir under the
-                # same (never-committed) generation name; replace it.
-                if os.path.exists(dest):
-                    shutil.rmtree(dest)
-                os.rename(os.path.join(staging, name), dest)
-                new_regions[day] = vname
-            shutil.rmtree(staging, ignore_errors=True)
-
-        new_wm = manifest["watermark_s"]
+        regions = self.store.publish(agged, "_d", manifest, replaced=touched)
+        new_wm = manifest.get("watermark_s")
         if new_wm is None or end_s > new_wm:
             new_wm = end_s
-        self._commit_manifest(
-            {
-                "version": gen,
-                "watermark_s": new_wm,
-                "regions": new_regions,
-                # previous generation's mapping, so a reader that
-                # resolved paths just before this commit keeps every
-                # directory it captured
-                "history": prev_regions,
-                "schema": _stored_schema(agged),
-            }
+        self.store.commit(
+            manifest, regions, schema=agged.drop("_d").schema,
+            watermark_s=new_wm,
         )
-        self._gc()
 
     def _day_in_window(self, day: str, start_s: int, end_s: int) -> bool:
-        import datetime as dt
-
         d0 = dt.datetime.strptime(day, "%Y-%m-%d").replace(
             tzinfo=dt.timezone.utc
         )
@@ -298,44 +217,19 @@ class ContinuousAggregate:
         day_end = day_start + 86400
         return day_start < end_s and day_end > start_s
 
-    def _gc(self) -> None:
-        """Delete version directories referenced by neither the current
-        manifest nor the retained previous generation (crash orphans
-        and superseded regions)."""
-        manifest = self._load_manifest()
-        keep: set[tuple[str, str]] = set()
-        for src in (manifest.get("regions", {}), manifest.get("history", {})):
-            for day, v in src.items():
-                keep.add((day, v))
-        for name in os.listdir(self.path):
-            if name.startswith("_staging_"):
-                shutil.rmtree(os.path.join(self.path, name),
-                              ignore_errors=True)
-                continue
-            if not name.startswith("d="):
-                continue
-            day = name[len("d="):]
-            ddir = os.path.join(self.path, name)
-            for v in os.listdir(ddir):
-                if (day, v) not in keep:
-                    shutil.rmtree(os.path.join(ddir, v), ignore_errors=True)
-            if not os.listdir(ddir):
-                os.rmdir(ddir)
-
     # -- read ---------------------------------------------------------
 
     def materialized(self) -> DataFrame:
         """The materialized aggregate rows (explicit committed paths —
         no directory listing races, region-granular pruning by
-        construction)."""
-        manifest = self._load_manifest()
-        paths = [
-            os.path.join(self.path, f"d={day}", v)
-            for day, v in sorted(manifest["regions"].items())
-        ]
-        if not paths:
+        construction). A refresh over a window with no source rows
+        commits no region; its level reads as an empty frame of the
+        recorded schema, so a cascade's next level can refresh from
+        it. Raises before the first refresh."""
+        manifest = self.store.load()
+        if not manifest["regions"] and "schema" not in manifest:
             raise ValueError(f"continuous aggregate at {self.path} is empty")
-        return self._read_regions(manifest, paths)
+        return self.store.read(self.spark, manifest)
 
     # -- streaming refresh policy ------------------------------------
 
@@ -393,7 +287,7 @@ class ContinuousAggregate:
         # materialized(∅) ∪ tail(>= wm) would silently drop everything
         # below the watermark. With nothing materialized, aggregate
         # the full source instead.
-        if wm is None or not self._load_manifest()["regions"]:
+        if wm is None or not self.store.load()["regions"]:
             return self._aggregate(source).drop("_eb")
         mat = self.materialized().filter(F.col("_eb") < F.lit(wm))
         tail = source.filter(
@@ -460,8 +354,6 @@ def cascade_refresh(
             return
         start_s = lo if start_s is None else start_s
         end_s = (hi + base.secs) if end_s is None else end_s
-    if _cascade_initial_fused(levels, source, int(start_s), int(end_s)):
-        return
     lo_i, hi_i = int(start_s), int(end_s)
     prev: ContinuousAggregate | None = None
     for cagg in levels:
@@ -491,154 +383,6 @@ def cascade_refresh(
         src = source if prev is None else prev.materialized()
         cagg.refresh(src, start_s=lo_i, end_s=hi_i)
         prev = cagg
-
-
-def _stored_schema(staged: DataFrame) -> dict:
-    """The parquet schema of a level's committed files: the staged
-    frame minus its ``_d`` region partition column."""
-    return staged.drop("_d").schema.jsonValue()
-
-
-def _fused_kill_point(name: str) -> None:
-    """Deterministic crash injection for the fused-commit soak
-    (soak_cagg_fused.py): SIGKILL-equivalent exit when the env var
-    names this boundary. Inert in production (one dict lookup)."""
-    if os.environ.get("CAGG_FUSED_KILL_AT") == name:
-        os._exit(137)
-
-
-def _cascade_initial_fused(
-    levels: list[ContinuousAggregate],
-    source: DataFrame,
-    start_s: int,
-    end_s: int,
-) -> bool:
-    """INITIAL-BUILD fast path for a two-level cascade (round 16,
-    VERDICT r15 #4): when both levels are FRESH (never committed), the
-    upper level's source-over-its-window is exactly the lower level's
-    just-computed aggregate — so instead of write → commit →
-    re-read-from-parquet → write → commit, both levels are staged
-    under ONE staging tree from one persisted lower aggregate (the
-    lower write computes and caches it, the upper write reads the
-    cache, and it is released after both writes), then renamed and
-    committed lower-level-first. Each level is written by its own job,
-    so each keeps the column types its own aggregates produce —
-    exactly what the sequential path commits (a shared union would
-    widen both to a common type).
-
-    Returns True when it handled the cascade; False = caller runs the
-    general sequential path (incremental refreshes, >2 levels, or a
-    level that cannot be refreshed).
-
-    Crash-safety is the SAME contract as ``refresh``: nothing under
-    ``d=<day>/v_...`` is visible until that level's single
-    ``os.replace`` manifest commit; a crash anywhere before the lower
-    commit leaves both manifests absent/previous and the next refresh
-    GCs the orphans; a crash BETWEEN the two commits leaves the upper
-    level un-refreshed — a legal cascade state (the upper level keeps
-    serving those buckets from its real-time tail; the next cascade
-    completes it). The kill-window soak (soak_cagg_fused.py) drives a
-    kill at every boundary and asserts query() equivalence.
-
-    What it saves: one full parquet re-read of the lower level's
-    partials per cascade (at 100 TB: |keys| × fine-buckets rows) and
-    one manifest round trip. Refresh semantics, watermark arithmetic
-    and committed bytes are identical — windows are computed with the
-    exact expressions the sequential loop uses, and the oracle hash
-    over the registered entry is unchanged.
-    """
-    if len(levels) != 2:
-        return False
-    lower, upper = levels
-    # sequential-loop window arithmetic, replicated exactly
-    if upper.secs % lower.secs != 0 or upper.ts_col != "bucket":
-        return False  # let the general path raise its errors
-    # Fresh = never committed (version 0, no watermark). Empty regions
-    # are not enough: a refresh over an empty window commits a version
-    # and a watermark with no regions, which this path would reset.
-    if lower._load_manifest()["version"] or upper._load_manifest()["version"]:
-        return False  # incremental refresh → general path
-    lo0 = lower._align(start_s)
-    hi0 = lower._align(end_s, up=True)
-    if hi0 <= lo0:
-        return True  # nothing to refresh anywhere (general path no-ops)
-    lo1 = upper._align(lo0)
-    # the sequential loop's min(align_up(end), align_down(lower
-    # watermark)); on the fresh path the lower watermark is hi0
-    hi1 = upper._align(hi0)
-    window = source.filter(
-        (F.col(lower.ts_col) >= F.timestamp_seconds(F.lit(lo0)))
-        & (F.col(lower.ts_col) < F.timestamp_seconds(F.lit(hi0)))
-    )
-    agg0 = (
-        lower._aggregate(window)
-        .withColumn("_d", F.to_date(F.timestamp_seconds("_eb")))
-        .persist()
-    )
-    staged = [agg0]
-    if hi1 > lo1:
-        src1 = agg0.drop("_d").filter(
-            (F.col(upper.ts_col) >= F.timestamp_seconds(F.lit(lo1)))
-            & (F.col(upper.ts_col) < F.timestamp_seconds(F.lit(hi1)))
-        )
-        staged.append(
-            upper._aggregate(src1).withColumn(
-                "_d", F.to_date(F.timestamp_seconds("_eb"))
-            )
-        )
-    vname = "v_000001"
-    staging = os.path.join(lower.path, f"_staging_fused_{vname}")
-    _fused_kill_point("pre_write")
-    try:
-        for lvl, agg in enumerate(staged):
-            (
-                agg.repartition("_d")
-                .write.mode("overwrite")
-                .partitionBy("_d")
-                .parquet(os.path.join(staging, f"_lvl={lvl}"))
-            )
-    finally:
-        agg0.unpersist()
-    _fused_kill_point("post_write")
-    regions: list[dict[str, str]] = [{}, {}]
-    if os.path.exists(staging):
-        first_rename = True
-        for lname in sorted(os.listdir(staging)):
-            if not lname.startswith("_lvl="):
-                continue
-            lvl = int(lname[len("_lvl="):])
-            cagg = levels[lvl]
-            ldir = os.path.join(staging, lname)
-            for dname in sorted(os.listdir(ldir)):
-                if not dname.startswith("_d="):
-                    continue
-                day = dname[len("_d="):]
-                dest = os.path.join(cagg.path, f"d={day}", vname)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                if os.path.exists(dest):
-                    shutil.rmtree(dest)
-                os.rename(os.path.join(ldir, dname), dest)
-                regions[lvl][day] = vname
-                if first_rename:
-                    first_rename = False
-                    _fused_kill_point("mid_rename")
-        shutil.rmtree(staging, ignore_errors=True)
-    _fused_kill_point("pre_lower_commit")
-    # commit lower first (the cascade invariant: an upper level never
-    # claims a watermark its lower level has not reached)
-    lower._commit_manifest(
-        {"version": 1, "watermark_s": hi0, "regions": regions[0],
-         "history": {}, "schema": _stored_schema(agg0)}
-    )
-    lower._gc()
-    _fused_kill_point("between_commits")
-    if hi1 > lo1:
-        upper._commit_manifest(
-            {"version": 1, "watermark_s": hi1, "regions": regions[1],
-             "history": {}, "schema": _stored_schema(staged[1])}
-        )
-        upper._gc()
-    return True
 
 
 def query_hierarchy(

@@ -29,6 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from timescale_cdc_spark.cdc.store import write_json_atomic
+
 
 @dataclass
 class Offset:
@@ -57,11 +59,8 @@ class IncrementalPoller:
             return None
 
     def _commit(self, off: Offset) -> None:
-        tmp = self.state_path + ".tmp"
         os.makedirs(os.path.dirname(self.state_path) or ".", exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump({"ts": off.ts, "event_id": off.event_id}, f)
-        os.replace(tmp, self.state_path)
+        write_json_atomic(self.state_path, {"ts": off.ts, "event_id": off.event_id})
 
     @property
     def offset(self) -> Offset:

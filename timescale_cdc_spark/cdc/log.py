@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from timescale_cdc_spark.cdc.store import write_json_atomic
 from timescale_cdc_spark.schemas import EVENT_LOG_SCHEMA
 
 _WATERMARK_FILE = "_event_id_watermark.json"
@@ -84,10 +85,7 @@ class EventLog:
             return 0
 
     def _commit_watermark(self, last_id: int) -> None:
-        tmp = self._watermark_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"last_event_id": last_id}, f)
-        os.replace(tmp, self._watermark_path())
+        write_json_atomic(self._watermark_path(), {"last_event_id": last_id})
 
     # -- write path ----------------------------------------------------------
 

@@ -11,37 +11,13 @@ table. That is the difference that matters when the log is 100 TB and
 the live table is 100 GB: a 1-row batch rewrites 1/n_buckets of the
 table, not all of it.
 
-Crash safety (round-2 fix): the previous directory-swap scheme
-(rename current→._old, rename tmp→current, rmtree ._old) could lose
-the table if the process died between the two renames. The layout is
-now versioned-directories + an atomically-replaced manifest:
-
-    path/_MANIFEST.json           {"version": 7, "n_buckets": 16,
-                                   "buckets": {"3": "v_000007", ...}}
-    path/bucket=3/v_000007/*.parquet
-
-Every write lands in a NEW version directory, invisible until the
-manifest is atomically replaced (os.replace of a complete temp file).
-A crash at ANY point leaves the old manifest pointing at intact data;
-orphaned staging/version directories are garbage-collected on the next
-apply. The manifest embeds the bucket maps of the trailing
-``retain_generations - 1`` predecessor generations (``history``), and
-``_gc()`` deletes exactly the version directories referenced by NO
-retained manifest — so a reader that resolved paths from any manifest
-in the retained window sees a consistent snapshot across a concurrent
-writer's commit, however cold its buckets are. (Round 7, ADVICE r6:
-the previous rule expired dirs by their CREATION generation, so a
-bucket untouched for >= N commits lost its just-superseded dir the
-moment a writer finally touched it — breaking even a reader holding
-the immediately-previous manifest. Retained-manifest reachability is
-supersession-aware by construction and also reclaims orphan dirs a
-crash left between the bucket rename and the manifest commit, which
-would otherwise collide with the next writer's os.rename.) Only
-readers more than N generations stale can lose paths, and those fail
-loudly (_current_paths raises on a missing referenced dir rather than
-silently returning a smaller table). Writers are still
-single-threaded per table (the reference's connector is a single task
-per relation, cdc-timescale-connector.json:8).
+Storage: the table is PK buckets stored as versioned directories
+behind one manifest (``_MANIFEST.json`` maps ``buckets`` to
+``bucket=N/v_<gen>`` directories). The commit protocol — staging,
+rename, one atomic manifest replace, retained-history GC — is
+cdc/store.py's: a merge is all-or-nothing across a crash at any point,
+and a reader holding any of the last ``retain_generations`` manifests
+keeps a consistent snapshot across a concurrent writer's commit.
 
 Scale: the batch is evaluated once — its last event per key, with the
 key and bucket projected, is persisted and feeds the touched-bucket
@@ -54,15 +30,11 @@ writer tasks × buckets).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_MANIFEST = "_MANIFEST.json"
+from timescale_cdc_spark.cdc.store import VersionedStore
 
 
 class MaterializedTable:
@@ -77,48 +49,22 @@ class MaterializedTable:
         n_buckets: int = 16,
         retain_generations: int = 2,
     ):
-        if retain_generations < 1:
-            raise ValueError("retain_generations must be >= 1")
         self.spark = spark
         self.path = path
         self.row_schema = row_schema
         self.pk = pk
         self.n_buckets = n_buckets
-        # Snapshot isolation for overlapping readers: _gc keeps version
-        # directories from the last `retain_generations` manifest
-        # generations (not just the current one), so a reader that
-        # resolved paths from manifest G-1 survives a writer committing
-        # G mid-scan. 1 = old eager behavior (serialized readers only).
-        self.retain_generations = retain_generations
-        os.makedirs(path, exist_ok=True)
+        # retain_generations: a reader that resolved paths from any of
+        # the last N manifests survives a writer committing mid-scan
+        # (1 = serialized readers only).
+        self.store = VersionedStore(path, "buckets", "bucket=", retain_generations)
         # The stored layout is authoritative: reopening an existing
         # table with a different n_buckets would make _bucket_expr
         # disagree with the on-disk bucketing (touched-bucket pruning
         # reads the wrong buckets, the anti-join misses existing rows).
-        manifest = self._load_manifest()
+        manifest = self.store.load()
         if manifest["buckets"] and manifest.get("n_buckets") != n_buckets:
             self.n_buckets = int(manifest["n_buckets"])
-
-    # -- manifest ------------------------------------------------------------
-
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, _MANIFEST)
-
-    def _load_manifest(self) -> dict:
-        try:
-            with open(self._manifest_path()) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {"version": 0, "n_buckets": self.n_buckets, "buckets": {}}
-
-    def _commit_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
-
-    def _bucket_dir(self, bucket: int, version: str) -> str:
-        return os.path.join(self.path, f"bucket={bucket}", version)
 
     def _bucket_expr(self, col: F.Column) -> F.Column:
         # Keys arriving from envelope JSON are strings; hash the string
@@ -126,29 +72,10 @@ class MaterializedTable:
         return F.pmod(F.hash(col.cast("string")), F.lit(self.n_buckets))
 
     def exists(self) -> bool:
-        return bool(self._load_manifest()["buckets"])
-
-    def _current_paths(self, manifest: dict | None = None) -> list[str]:
-        m = manifest or self._load_manifest()
-        paths = []
-        for b, v in sorted(m["buckets"].items(), key=lambda kv: int(kv[0])):
-            p = self._bucket_dir(int(b), v)
-            if not os.path.isdir(p):
-                # Silently skipping would mask data loss as a smaller
-                # table; a manifest-referenced dir must exist.
-                raise FileNotFoundError(
-                    f"manifest v{m['version']} references missing bucket "
-                    f"directory {p}; table is corrupt or being mutated by "
-                    "a concurrent writer"
-                )
-            paths.append(p)
-        return paths
+        return bool(self.store.load()["buckets"])
 
     def read(self) -> DataFrame:
-        paths = self._current_paths()
-        if not paths:
-            return self.spark.createDataFrame([], schema=self.row_schema)
-        return self.spark.read.schema(self.row_schema).parquet(*paths)
+        return self.store.read(self.spark, self.store.load(), schema=self.row_schema)
 
     # -- merge ---------------------------------------------------------------
 
@@ -161,8 +88,6 @@ class MaterializedTable:
           version directory per touched bucket + one atomic manifest
           replace make the whole merge all-or-nothing.
         """
-        self._gc()  # sweep orphans from any earlier crash
-
         key = F.coalesce(
             F.get_json_object("after", f"$.{self.pk}"),
             F.get_json_object("before", f"$.{self.pk}"),
@@ -200,20 +125,10 @@ class MaterializedTable:
             .select(F.from_json("after", self.row_schema).alias("r"))
             .select("r.*")
         )
-        manifest = self._load_manifest()
-        new_version = f"v_{manifest['version'] + 1:06d}"
-
+        manifest = self.store.load()
+        buckets = [str(b) for b in touched_buckets]
         # Current rows of ONLY the touched buckets.
-        touched_paths = [
-            self._bucket_dir(b, manifest["buckets"][str(b)])
-            for b in touched_buckets
-            if str(b) in manifest["buckets"]
-        ]
-        if touched_paths:
-            target = self.spark.read.schema(self.row_schema).parquet(*touched_paths)
-        else:
-            target = self.spark.createDataFrame([], schema=self.row_schema)
-
+        target = self.store.read(self.spark, manifest, buckets, self.row_schema)
         untouched = target.join(
             last,
             target[self.pk].cast("string") == last["_k"],
@@ -222,79 +137,9 @@ class MaterializedTable:
         merged = untouched.unionByName(upserts).withColumn(
             "_bucket", self._bucket_expr(F.col(self.pk))
         )
-
-        # Hash-partitioning on the bucket first gives each bucket ONE
-        # writer task, so each version directory holds one file.
-        staging = os.path.join(self.path, f"_staging_{new_version}")
-        (
-            merged.repartition("_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(staging)
+        # A bucket left with no rows drops out of the manifest.
+        self.store.commit(
+            manifest,
+            self.store.publish(merged, "_bucket", manifest, replaced=buckets),
+            n_buckets=self.n_buckets,
         )
-
-        new_buckets = dict(manifest["buckets"])
-        for b in touched_buckets:
-            src = os.path.join(staging, f"_bucket={b}")
-            if os.path.isdir(src):
-                dst = self._bucket_dir(b, new_version)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(src, dst)
-                new_buckets[str(b)] = new_version
-            else:
-                # every row in the bucket was deleted
-                new_buckets.pop(str(b), None)
-
-        # The outgoing manifest's bucket map joins the retained
-        # history so every dir it references survives _gc until it is
-        # retain_generations superseded — expiry is by SUPERSESSION,
-        # not creation generation (a cold bucket's dir may be
-        # arbitrarily old and still current).
-        history = [
-            {"version": manifest["version"], "buckets": manifest["buckets"]}
-        ] + manifest.get("history", [])
-        self._commit_manifest(
-            {
-                "version": manifest["version"] + 1,
-                "n_buckets": self.n_buckets,
-                "buckets": new_buckets,
-                "history": history[: self.retain_generations - 1],
-            }
-        )
-        self._gc()
-
-    def _gc(self) -> None:
-        """Remove leftover staging dirs and every version dir no
-        retained manifest references.
-
-        The manifest carries the bucket maps of its
-        ``retain_generations - 1`` predecessors (``history``), so the
-        keep-set is exact manifest reachability: a dir lives until it
-        has been SUPERSEDED for retain_generations commits, however
-        long it was current before that (round-7 fix — the previous
-        creation-generation rule deleted a cold bucket's
-        just-superseded dir out from under a reader holding the
-        immediately-previous manifest). Readers holding any retained
-        manifest keep a consistent snapshot across a concurrent
-        writer's commit+gc; staler readers fail loudly via
-        _current_paths' missing-dir check. Also reclaims
-        never-referenced orphan dirs from a crash between the bucket
-        rename loop and the manifest commit (their name would collide
-        with the next writer's rename target). Safe at any time —
-        reachable data is never touched."""
-        manifest = self._load_manifest()
-        keep = {
-            (b, v)
-            for m in [manifest, *manifest.get("history", [])]
-            for b, v in m["buckets"].items()
-        }
-        for name in os.listdir(self.path):
-            full = os.path.join(self.path, name)
-            if name.startswith("_staging_"):
-                shutil.rmtree(full, ignore_errors=True)
-            elif name.startswith("bucket=") and os.path.isdir(full):
-                bucket = name.split("=", 1)[1]
-                for ver in os.listdir(full):
-                    if (bucket, ver) in keep or not ver.startswith("v_"):
-                        continue  # reachable, or not a dir we created
-                    shutil.rmtree(os.path.join(full, ver), ignore_errors=True)

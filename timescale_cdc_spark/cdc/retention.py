@@ -20,6 +20,7 @@ import os
 import shutil
 
 from timescale_cdc_spark.cdc.log import EventLog
+from timescale_cdc_spark.cdc.store import write_json_atomic
 
 
 def _partition_dates(log: EventLog) -> list[dt.date]:
@@ -163,12 +164,7 @@ def _commit_layout(part: str, manifest: dict) -> None:
     no/stale manifest with new data, in which case the next run simply
     recomputes bounds and rewrites (idempotent — the same
     crash-at-any-point contract as the compaction swap itself)."""
-    import json
-
-    tmp = os.path.join(part, _LAYOUT_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(part, _LAYOUT_MANIFEST))
+    write_json_atomic(os.path.join(part, _LAYOUT_MANIFEST), manifest)
 
 
 def _compact_dir(log: EventLog, part: str, target_files: int) -> int:

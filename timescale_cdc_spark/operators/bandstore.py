@@ -128,13 +128,15 @@ class BandedIndexStore:
         what survived — a high-duplicate stream admits few docs per
         large batch, and estimating from admitted rows would pick a
         fine layout whose every bulk lookup degrades to a full scan."""
-        import json
         import os
+
+        from timescale_cdc_spark.cdc.store import write_json_atomic
 
         d = os.path.join(self.index_path, f"ingest_batch={batch_id}")
         if os.path.isdir(d):
-            with open(os.path.join(d, "_meta.json"), "w") as f:
-                json.dump({"batch_docs": n_docs}, f)
+            write_json_atomic(
+                os.path.join(d, "_meta.json"), {"batch_docs": n_docs}
+            )
 
     def _batch_sizes(self) -> list[float]:
         """Incoming docs per current batch dir (recorded meta;
@@ -322,10 +324,10 @@ class BandedIndexStore:
         leaves reads filtered/correct and the next compact finishes
         the job), and outstanding tombstones force a compaction even
         when the directory count alone wouldn't."""
-        import json
         import os
         import shutil
 
+        from timescale_cdc_spark.cdc.store import write_json_atomic
         from timescale_cdc_spark.operators import tombstones as tb
 
         batch_dirs = self._batch_dirs()
@@ -404,8 +406,7 @@ class BandedIndexStore:
         meta: dict = {"prefix_mod": mod}
         if batch_est is not None:
             meta["batch_est"] = batch_est
-        with open(os.path.join(gdir, "_meta.json"), "w") as f:
-            json.dump(meta, f)
+        write_json_atomic(os.path.join(gdir, "_meta.json"), meta)
         for name in batch_dirs:
             shutil.rmtree(
                 os.path.join(self.index_path, name), ignore_errors=True

@@ -48,6 +48,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from timescale_cdc_spark.cdc.store import write_json_atomic
 from timescale_cdc_spark.operators.sampling import (
     HASH_SPACE,
     det_hash,
@@ -256,10 +257,7 @@ def write_shards(
         "digest_chunk_rows": digest_chunk_rows,
         "shards": shards,
     }
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
+    write_json_atomic(os.path.join(path, _MANIFEST), manifest)
     return manifest
 
 

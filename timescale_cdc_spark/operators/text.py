@@ -370,6 +370,8 @@ def unigram_logprobs(
     import math
     import os
 
+    from timescale_cdc_spark.cdc.store import write_json_atomic
+
     spark = ref_docs.sparkSession
     manifest = (
         os.path.join(artifact_path, "_MANIFEST.json")
@@ -418,14 +420,9 @@ def unigram_logprobs(
     if artifact_path:
         lm_dir = os.path.join(artifact_path, "lm")
         lm.write.mode("overwrite").parquet(lm_dir)
-        tmp = manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"oov_logp": oov_logp, "denom": denom, "v": row["v"]}, f
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, manifest)
+        write_json_atomic(
+            manifest, {"oov_logp": oov_logp, "denom": denom, "v": row["v"]}
+        )
         # hand back the artifact scan: the write above already
         # consumed the persisted counts (released here — nothing will
         # read them again), and future consumers read the compact

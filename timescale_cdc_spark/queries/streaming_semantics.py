@@ -686,7 +686,7 @@ def b41_b48_streaming_semantics(
         ["k"],
         lambda: [F.sum("n").alias("n"), F.sum("s").alias("s")],
     )
-    # materialized() raises on a zero-region hourly manifest (a dead
+    # materialized() raises on a never-refreshed hourly level (a dead
     # refresh path); leave the daily level unrefreshed in that case —
     # its gate then zeroes the scagg families instead of the crash
     # killing all nine (same guard as the read sites below)
@@ -848,10 +848,11 @@ def b41_b48_streaming_semantics(
     # the hash alone could mask — query()'s empty-manifest fallback
     # aggregates the full source and is itself exact, so a dead
     # refresh path would otherwise still hash-match.
-    # materialized() raises on a zero-region manifest — the very
-    # dead-refresh regression this gate exists to expose. Catch it so
-    # the regression zeroes the scagg families instead of crashing
-    # the other seven (round-13 review finding).
+    # materialized() raises on a never-refreshed level and reads empty
+    # after refreshes that committed no region — the very dead-refresh
+    # regression this gate exists to expose (the count below catches
+    # the empty read). Catch the raise so the regression zeroes the
+    # scagg families instead of crashing the other seven (round-13 finding).
     try:
         sc_mat_rows = sc_cagg.materialized()
         sc_gate = (
@@ -895,12 +896,14 @@ def b41_b48_streaming_semantics(
         sc_day_gate = (
             sc_gate
             and day_wm == sc_day.align_down(sc_wm_late or 0)
+            # a zero-region daily manifest — dead cascade
+            and bool(sc_day.store.load()["regions"])
             and sc_day.materialized()
             .filter(F.col("_eb") >= F.lit(day_wm))
             .count()
             == 0
         )
-    except ValueError:  # zero-region daily manifest — dead cascade
+    except ValueError:  # never-refreshed daily level — dead cascade
         sc_day_gate = False
     fams.append(
         _fam(

@@ -14,8 +14,28 @@ maxPartitionBytes; both are overridable via env/kwargs here.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(meminfo: str) -> str:
+    """Default ``spark.driver.memory`` for a host whose ``/proc/meminfo``
+    text is ``meminfo``: half of ``MemAvailable`` in whole GiB, at least
+    1g. In local mode the driver heap is the executor heap; a heap
+    sized past the memory the host can give gets the JVM killed by the
+    kernel instead of making Spark spill."""
+    m = re.search(r"^MemAvailable:\s+(\d+) kB", meminfo, re.MULTILINE)
+    kib = int(m.group(1)) if m else 0
+    return f"{max(1, kib // (2 * 1024 * 1024))}g"
+
+
+def _default_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return driver_memory(f.read())
+    except OSError:
+        return driver_memory("")
 
 
 def get_spark(
@@ -27,7 +47,8 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     Env overrides: SPARK_GRAFT_CPUS → local[N] parallelism,
-    SPARK_GRAFT_SHUFFLE_PARTITIONS → shuffle partition count.
+    SPARK_GRAFT_SHUFFLE_PARTITIONS → shuffle partition count,
+    SPARK_DRIVER_MEMORY → driver heap (default: ``driver_memory``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -72,7 +93,10 @@ def get_spark(
         # messages. Emitted plans are byte-identical.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
