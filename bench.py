@@ -261,7 +261,7 @@ def _stream_throughput(spark) -> dict:
 
     Best-of-2 complete runs (round 15, VERDICT r14 #1): the r14
     "streaming drop" was a SINGLE-SHOT measurement landing in a slow
-    host phase — the interleaved A/B (profile_stream.py, SCALE.md)
+    host phase — the interleaved A/B (SCALE.md)
     showed both trees 2-4× faster warm and within noise of each
     other. The first run still pays stream-startup/codegen warm-up;
     best-of-2 reads the machinery's capability the way min-of-N

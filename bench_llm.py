@@ -106,9 +106,6 @@ def main() -> None:
     brute_force_topk(vecs, queries, k=5).count()
     t_brute = time.perf_counter() - t0
     t0 = time.perf_counter()
-    brute_force_topk(vecs, queries, k=5, engine="arrow").count()
-    t_brute_arrow = time.perf_counter() - t0
-    t0 = time.perf_counter()
     brute_force_topk_matmul(vecs, queries, k=5).count()
     t_brute_matmul = time.perf_counter() - t0
     t0 = time.perf_counter()
@@ -150,7 +147,6 @@ def main() -> None:
                 "simhash_sec": round(t_simhash, 2),
                 "simhash_pairs": n_sim_pairs,
                 "brute_topk_sec": round(t_brute, 2),
-                "brute_topk_arrow_sec": round(t_brute_arrow, 2),
                 "brute_topk_matmul_sec": round(t_brute_matmul, 2),
                 "ivf_topk_sec": round(t_ivf, 2),
                 "ivf_index_build_sec": round(t_ivf_build, 2),

@@ -429,21 +429,6 @@ def test_ann_recall_vs_brute_force(spark, ann_sf_dir):
             assert exact_scores[(r.q_id, r.c_id)] == r.cos
 
 
-def test_lsh_arrow_sketch_engine_matches_jvm(spark, sf_dir):
-    """The numpy-matmul sketch engine (the million-vector throughput
-    path, 6.7× at 1M — SCALE.md) must band identically to the JVM
-    expression fold on the fixture corpus and return the same ranked
-    neighbors."""
-    em = load_table(spark, sf_dir, "embeddings")
-    queries = em.filter(F.col("vec_id") < 10)
-    jvm = {(r.q_id, r.c_id, r.rank, r.cos)
-           for r in hyperplane_lsh_topk(em, queries, k=5).collect()}
-    arrow = {(r.q_id, r.c_id, r.rank, r.cos)
-             for r in hyperplane_lsh_topk(
-                 em, queries, k=5, sketch_engine="arrow").collect()}
-    assert jvm == arrow
-
-
 @pytest.mark.parametrize("ann_sf", ["sf0.001", "sf0.01"])
 @pytest.mark.slow
 def test_c3_ann_registered_query_has_all_families(spark, ann_sf):
@@ -621,15 +606,20 @@ def test_curation_pipeline_stages_and_provenance(spark, sf_dir):
     assert all(not h.is_cached for h in handles)
 
 
-def test_arrow_scoring_engine_matches_jvm(spark, sf_dir):
-    """cosine_arrow (numpy batch) must agree with the JVM fold at the
-    4-dp rounding every scorer output goes through."""
+def test_arrow_scoring_engine_matches_jvm(spark, sf_dir, tmp_path):
+    """The numpy-batched re-rank scorer behind
+    ``IvfIndex.topk(engine='arrow')`` must agree with the JVM fold at
+    the 4-dp rounding every scorer output goes through."""
+    from timescale_cdc_spark.operators.ann_index import IvfIndex
+
     em = load_table(spark, sf_dir, "embeddings")
     queries = em.filter(F.col("vec_id") < 10)
+    idx = IvfIndex(spark, str(tmp_path / "ivf")).build(em, n_clusters=8)
     jvm = {(r.q_id, r.c_id): r.cos
-           for r in brute_force_topk(em, queries, k=5, engine="jvm").collect()}
+           for r in idx.topk(queries, k=5, n_probe=8).collect()}
     arrow = {(r.q_id, r.c_id): r.cos
-             for r in brute_force_topk(em, queries, k=5, engine="arrow").collect()}
+             for r in idx.topk(queries, k=5, n_probe=8,
+                               engine="arrow").collect()}
     assert set(jvm) == set(arrow)
     for pair, cos in jvm.items():
         assert abs(arrow[pair] - cos) <= 1e-4, (pair, cos, arrow[pair])
@@ -770,8 +760,7 @@ def test_lsh_index_build_append_query(spark, sf_dir, tmp_path):
     idx = LshIndex(spark, str(tmp_path / "lsh")).build(base, prefix_bits=2)
     idx.append(extra)
     inline = {(r.q_id, r.c_id, r.rank, r.cos)
-              for r in hyperplane_lsh_topk(
-                  em, queries, k=5, sketch_engine="arrow").collect()}
+              for r in hyperplane_lsh_topk(em, queries, k=5).collect()}
     got = idx.topk(queries, k=5)
     # probed (band, key-prefix) literals must prune the banded scan
     plan = got._jdf.queryExecution().executedPlan().toString()

@@ -195,77 +195,6 @@ def test_running_latest_state(spark, tmp_path):
     assert got["2"].current_row is None
 
 
-def test_running_latest_state_v2_transform_with_state(spark, tmp_path):
-    """B46 on the Spark 4 transformWithState API: same last-event-wins
-    convergence as the applyInPandasWithState path (VERDICT r1 item 8).
-    Needs the RocksDB state store provider; skips if unavailable.
-
-    Why this skips in this container (investigated, VERDICT r4 #7):
-    the TransformWithStateInPySpark worker imports
-    pyspark/sql/streaming/proto/StateMessage_pb2.py, whose gencode
-    validates a google.protobuf runtime >= 5.27
-    (ValidateProtobufRuntimeVersion). No protobuf runtime exists
-    anywhere on this image (searched site-packages, gcloud SDK's
-    bundled copies — none provide google.protobuf) and package
-    installation is unavailable, so the worker exits at import and the
-    query dies with 'driver worker exited unexpectedly'. The
-    applyInPandasWithState path (streaming/state.py:80) covers B46 and
-    runs green; this test turns into a pass the moment a protobuf
-    runtime appears."""
-    from timescale_cdc_spark.streaming.state import running_latest_state_v2
-
-    rows = [
-        (T0, "dataschema", "assets", "INSERT", None, '{"id": 1, "name": "A"}', 1),
-        (T0 + dt.timedelta(minutes=1), "dataschema", "assets", "UPDATE",
-         '{"id": 1, "name": "A"}', '{"id": 1, "name": "B"}', 2),
-        (T0, "dataschema", "assets", "INSERT", None, '{"id": 2, "name": "X"}', 3),
-        (T0 + dt.timedelta(minutes=2), "dataschema", "assets", "DELETE",
-         '{"id": 2, "name": "X"}', None, 4),
-    ]
-    src = _envelope_stream_dir(spark, tmp_path, rows)
-    stream = spark.readStream.schema(EVENT_LOG_SCHEMA).parquet(src)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = running_latest_state_v2(stream, "id")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("state_out_v2")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt_state_v2"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    except Exception as ex:  # pragma: no cover - environment-dependent
-        msg = str(ex)
-        if any(
-            gate in msg
-            for gate in (
-                "RocksDB",
-                "protobuf",
-                "STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE",
-                "TransformWithStateInPySpark driver worker exited",
-            )
-        ):
-            pytest.skip(f"transformWithState runtime unavailable: {msg[:200]}")
-        raise
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-    got = {r.pk: r for r in spark.sql("SELECT * FROM state_out_v2").collect()}
-    assert got["1"].last_operation == "UPDATE"
-    assert '"B"' in got["1"].current_row
-    assert got["2"].last_operation == "DELETE"
-    assert got["2"].current_row is None
-
-
 def test_streaming_exact_dedup_by_content(spark, tmp_path):
     """C1-streaming: the ingest gate drops re-posted content (incl.
     whitespace/case variants) across micro-batches within the

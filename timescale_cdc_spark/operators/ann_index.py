@@ -35,8 +35,7 @@ class StreamingVectorDedup(BandedIndexStore):
     initial 4×8-bit configuration collided each incoming vector with
     ~index/256 per band, and the exact-verify cost made per-batch time
     grow 4×/batch at a 10k-batch soak; 16-bit buckets cut candidates
-    ~250× and hold the per-batch curve flat (soak_gates.py numbers in
-    SCALE.md).
+    ~250× and hold the per-batch curve flat (gate soak in SCALE.md).
 
     Index layout: ``ingest_batch=<b>/`` partition dirs of banded rows
     (c_id, c_vec, chunk, key); a replayed batch overwrites its own

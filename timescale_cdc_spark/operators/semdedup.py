@@ -27,9 +27,9 @@ sizing rule (paper's operating point): ``n_clusters ≈ n / 2000`` —
 ~2k members per cell keeps the per-cell pair work ≈ 4M and the total
 candidate count ≈ 2000·n, linear in the corpus. ``cell_stats`` reports
 the realized max cell size and Σ m_c² so a skewed fit is visible
-(soak_semdedup.py asserts them). No CartesianProduct (the join is
-equi on _cell; pinned by test), cosines are pure JVM higher-order
-expressions, verdicts one groupBy — no Python anywhere.
+(the 200k-vector soak in SCALE.md reads them). No CartesianProduct
+(the join is equi on _cell; pinned by test), cosines are pure JVM
+higher-order expressions, verdicts one groupBy — no Python anywhere.
 """
 
 from __future__ import annotations
@@ -170,8 +170,8 @@ def cell_stats(marks: DataFrame) -> DataFrame:
     self-join would do with no ``max_cluster`` rank cap. Compare
     ``max_cell`` against the cap and ``sum_m2`` against all-pairs
     n·(n−1)/2 to see whether the clustering actually bounded the work
-    (soak_semdedup.py asserts both). One groupBy over the marks — no
-    second pass over the vectors."""
+    (the 200k-vector soak in SCALE.md reads both). One groupBy over the
+    marks — no second pass over the vectors."""
     per_cell = marks.groupBy("_cell").agg(
         F.count("*").alias("m"),
         F.sum(F.col("kept").cast("long")).alias("k"),

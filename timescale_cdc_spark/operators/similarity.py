@@ -72,10 +72,11 @@ def cosine(a, b) -> F.Column:
 
 
 def cosine_arrow(a, b) -> F.Column:
-    """Arrow-vectorized cosine (numpy batch, SIMD): ~10-50× the
-    throughput of the interpreted higher-order-function fold at
-    million-vector scale (SCALE.md), at the cost of a different float
-    summation ORDER than the sequential fold — use for ANN scoring
+    """Arrow-vectorized cosine (numpy batch): the re-rank scorer behind
+    ``IvfIndex.topk(engine='arrow')``, where probed cells hand it
+    hundreds of thousands of candidate pairs (SCALE.md: 3.7 vs 5.8 s
+    median per 10-query batch at 200k vectors). Its float summation
+    ORDER differs from the sequential fold, so use it for ANN scoring
     (results round to 4 dp anyway), not for oracle-paired queries."""
     from pyspark.sql.types import DoubleType
 
@@ -106,27 +107,24 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 4,
-    engine: str = "jvm",
 ) -> DataFrame:
     """Exact top-K: for each query vector, the K nearest corpus
     vectors by cosine (self-matches excluded). The query side is
     broadcast — at 100 TB the corpus scan stays a single
     embarrassingly-parallel pass. Ties break on corpus id for
-    determinism. ``engine='arrow'`` swaps the scorer for the
-    numpy-batched pandas UDF (see cosine_arrow) — the throughput path
-    for million-vector sweeps."""
+    determinism. For million-vector sweeps use
+    :func:`brute_force_topk_matmul`."""
     q = queries.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     )
     c = corpus.select(
         F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
     )
-    score = _cosine_for(engine)
     scored = (
         c.join(F.broadcast(q), F.col("c_id") != F.col("q_id"))
-        # names, not Columns: the jvm scorer then builds one parsed
-        # SQL string (see cosine); pandas_udf accepts names too
-        .withColumn("cos", F.round(score("q_vec", "c_vec"), round_digits))
+        # names, not Columns: the scorer then builds one parsed SQL
+        # string (see cosine)
+        .withColumn("cos", F.round(cosine("q_vec", "c_vec"), round_digits))
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
     return (
@@ -147,7 +145,7 @@ def brute_force_topk_matmul(
     """Exact top-K via one matrix multiply per Arrow batch — the
     million-vector throughput path.
 
-    The pairwise scorers (JVM fold or cosine_arrow) materialize
+    The pairwise scorer (brute_force_topk) materializes
     |corpus| × |queries| pair rows before scoring; at 1M × 10 that is
     10M rows of shuffled/transferred vector payload and the data
     movement, not the math, dominates (measured in SCALE.md). Here the
@@ -231,35 +229,6 @@ def sketch_bits(vec_col: str, planes: list[list[float]]) -> F.Column:
     return F.expr(terms)
 
 
-def proj_expr(vec_col: str, planes: list[list[float]]) -> F.Column:
-    """``array<double>`` of the vector's dot product with every
-    hyperplane — the raw margins the sign sketch quantizes. Built as
-    ONE expr() string (same rationale as sketch_bits). Exposing the
-    margins (not just the signs) is what enables query-directed
-    multi-probe: the bits most likely to be on the wrong side of the
-    plane are exactly the lowest-|margin| ones."""
-    from timescale_cdc_spark.functions.ident import sql_ident
-
-    def dot_expr(plane: list[float]) -> str:
-        arr = ", ".join(f"{float(v)!r}D" for v in plane)
-        return (
-            f"aggregate(zip_with({sql_ident(vec_col)}, array({arr}), "
-            "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)"
-        )
-
-    return F.expr("array(" + ", ".join(dot_expr(p) for p in planes) + ")")
-
-
-def _home_key(proj: str, c: int, width: int) -> str:
-    """SQL for band c's bucket key from the margin array: pack the
-    sign bits of planes [c*width, (c+1)*width)."""
-    return (
-        f"aggregate(zip_with(slice({proj}, {c * width + 1}, {width}), "
-        f"sequence(0, {width - 1}), "
-        "(p, j) -> IF(p > 0.0D, shiftleft(1L, j), 0L)), 0L, (a, b) -> a | b)"
-    )
-
-
 def _lsh_rerank(cb: DataFrame, qb: DataFrame, k: int) -> DataFrame:
     """Shared LSH tail: banded candidate join (query side broadcast),
     dedup, EXACT cosine re-rank, per-query top-K."""
@@ -301,14 +270,14 @@ def _banded_arrow(
     vec_col: str,
     n_flip: int = 0,
 ) -> DataFrame:
-    """Arrow/numpy variant of the sketch+banding pipeline: one matmul
-    per Arrow batch against the plane matrix instead of num_planes
-    interpreted higher-order folds per row. Same keys except for dot
-    products within float-rounding of zero (summation-order
-    sensitivity — the standard jvm/arrow trade documented on the
-    scorers). ~10× on the corpus-side sketch at 1M vectors (SCALE.md).
-    ``n_flip > 0`` additionally emits the margin-directed multi-probe
-    keys (query side)."""
+    """The LSH sketch + banding step shared by hyperplane_lsh_topk and
+    LshIndex: one numpy matmul per Arrow batch against the plane
+    matrix, then per band the packed sign bits of its ``width`` planes
+    as the bucket key. The interpreted per-row JVM fold it replaced
+    took 6.7× longer at 1M vectors (SCALE.md). ``n_flip > 0``
+    additionally emits the margin-directed multi-probe keys (query
+    side): per band, the home key with each of the ``n_flip``
+    lowest-|margin| bits flipped."""
     P = np.asarray(planes, dtype=np.float64).T  # dim × planes
 
     def gen(batches):
@@ -361,7 +330,6 @@ def hyperplane_lsh_topk(
     dim: int = 64,
     seed: int = 42,
     n_flip: int = 2,
-    sketch_engine: str = "jvm",
 ) -> DataFrame:
     """Approximate top-K: 96-bit hyperplane sketch banded into 16
     6-bit chunks; candidates share ≥1 probed bucket; exact cosine
@@ -381,21 +349,15 @@ def hyperplane_lsh_topk(
 
     Only the (tiny, broadcast) query side pays the multi-probe
     explosion; the corpus is sketched once, linearly, into home
-    buckets. Everything — margins, keys, flip selection — is JVM-side
-    SQL expression, no Python in the hot path. Scale knob: width
-    (bits/band) grows with corpus size to keep buckets small;
-    n_flip/chunks grow recall.
+    buckets. Margins, keys and flip selection come from one numpy
+    matmul per Arrow batch (:func:`_banded_arrow`, the same banding
+    LshIndex persists); the re-rank is the exact JVM cosine. Scale
+    knob: width (bits/band) grows with corpus size to keep buckets
+    small; n_flip/chunks grow recall.
 
     Recall is floor-tested against brute_force_topk at BOTH sf0.001
     and sf0.01 (tests/test_operators.py) and gated in-plan in the
     registered query (queries/llm_queries.py::c3_ann_lsh_ivf).
-
-    ``sketch_engine='arrow'`` computes sketches as one numpy matmul
-    per Arrow batch instead of num_planes interpreted JVM folds per
-    row — the million-vector throughput path (same trade as the
-    scorers: summation order differs, so a dot within float-rounding
-    of zero can band differently; ranked output is exact either way
-    because re-ranking is exact).
     """
     if num_planes % chunks:
         raise ValueError("num_planes must be divisible by chunks")
@@ -403,71 +365,12 @@ def hyperplane_lsh_topk(
     width = num_planes // chunks
     if n_flip > width:
         raise ValueError("n_flip cannot exceed the band width")
-    if sketch_engine not in ("jvm", "arrow"):
-        raise ValueError(
-            f"unknown sketch engine {sketch_engine!r}; use 'jvm' or 'arrow'"
-        )
-    if sketch_engine == "arrow":
-        cb = _banded_arrow(
-            corpus, "c", planes, chunks, width, id_col, vec_col
-        ).withColumnsRenamed({"chunk": "c_chunk", "key": "c_key"})
-        qb = _banded_arrow(
-            queries, "q", planes, chunks, width, id_col, vec_col, n_flip
-        ).withColumnsRenamed({"chunk": "q_chunk", "key": "q_key"})
-        return _lsh_rerank(cb, qb, k)
-
-    # Corpus side: home buckets only — one struct per band.
-    corpus_bands = ", ".join(
-        f"struct({c} AS chunk, {_home_key('_proj', c, width)} AS key)"
-        for c in range(chunks)
-    )
-    cb = (
-        corpus.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            proj_expr(vec_col, planes).alias("_proj"),
-        )
-        .select(
-            "c_id",
-            "c_vec",
-            F.explode(F.expr(f"array({corpus_bands})")).alias("ck"),
-        )
-        .select("c_id", "c_vec", "ck.chunk", "ck.key")
-        .withColumnsRenamed({"chunk": "c_chunk", "key": "c_key"})
-    )
-
-    # Query side: home bucket + n_flip lowest-|margin| single-bit
-    # flips per band. array_sort on (margin, bit) structs is
-    # deterministic; `home ^ shiftleft(1, j)` is the flipped key.
-    def probe_structs(c: int) -> str:
-        home = _home_key("_proj", c, width)
-        margins = (
-            f"zip_with(slice(_proj, {c * width + 1}, {width}), "
-            f"sequence(0, {width - 1}), (p, j) -> struct(abs(p) AS m, j AS j))"
-        )
-        flips = f"slice(transform(array_sort({margins}), s -> s.j), 1, {n_flip})"
-        return (
-            f"concat(array(struct({c} AS chunk, {home} AS key)), "
-            f"transform({flips}, j -> struct({c} AS chunk, "
-            f"({home} ^ shiftleft(1L, j)) AS key)))"
-        )
-
-    query_bands = ", ".join(probe_structs(c) for c in range(chunks))
-    qb = (
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            proj_expr(vec_col, planes).alias("_proj"),
-        )
-        .select(
-            "q_id",
-            "q_vec",
-            F.explode(F.expr(f"concat({query_bands})")).alias("ck"),
-        )
-        .select("q_id", "q_vec", "ck.chunk", "ck.key")
-        .withColumnsRenamed({"chunk": "q_chunk", "key": "q_key"})
-    )
-
+    cb = _banded_arrow(
+        corpus, "c", planes, chunks, width, id_col, vec_col
+    ).withColumnsRenamed({"chunk": "c_chunk", "key": "c_key"})
+    qb = _banded_arrow(
+        queries, "q", planes, chunks, width, id_col, vec_col, n_flip
+    ).withColumnsRenamed({"chunk": "q_chunk", "key": "q_key"})
     return _lsh_rerank(cb, qb, k)
 
 

@@ -730,8 +730,8 @@ class IvfIndex(VectorIndex):
              id_col: str = "vec_id", vec_col: str = "embedding",
              engine: str = "jvm") -> DataFrame:
         """``engine='arrow'`` re-ranks with the numpy-batched scorer
-        (similarity.cosine_arrow) — the throughput path once probes
-        touch millions of candidates."""
+        (similarity.cosine_arrow): 3.7 vs 5.8 s median per batch at
+        200k vectors with 8 of 64 cells probed (SCALE.md)."""
         return self._topk(queries, k, id_col, vec_col, n_probe=n_probe,
                           engine=engine)
 

@@ -129,7 +129,7 @@ def b14_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 9 also adds layout='zordered' rows: the same events
     rewritten Morton-ordered on (user_id, ts)
     (operators/layout.py::zorder_write — the space-dimension
-    chunk-exclusion layout, pruning measured in soak_zorder.py) and
+    chunk-exclusion layout, pruning measured in SCALE.md) and
     aggregated identically — the hash match proves the z-order
     rewrite is also a pure reorder."""
     path = _scratch(sf_dir, "events_partitioned")

@@ -41,6 +41,34 @@ from pyspark.sql import functions as F
 
 from timescale_cdc_spark.queries.base import register, scratch_path, t
 
+#: Frames each lib_* entry cached or localCheckpointed, keyed by entry.
+#: An entry's construction first releases what its PREVIOUS
+#: construction registered (entries are built and consumed one at a
+#: time, so that plan is done being consumed), so repeated
+#: invocations hold one construction's caches per entry instead of
+#: accumulating persistent RDDs. Keyed by entry: building one entry
+#: never drops another entry's checkpoints (entries share the fact
+#: scan's cache, whose release only costs a re-scan).
+_LIB_CACHES: dict[str, list[DataFrame]] = {}
+
+
+def _fresh_caches(entry: str) -> list[DataFrame]:
+    """Release every frame ``entry``'s previous construction
+    registered; return the empty list this construction registers its
+    own caches into. A registered frame releases its own cache and
+    every local checkpoint its plan reads — including those an
+    operator took internally (connected_components' edge cuts)."""
+    for df in _LIB_CACHES.pop(entry, []):
+        df.unpersist()
+        # DataFrame.unpersist does not reach a localCheckpoint's
+        # blocks: they belong to the RDD under a LogicalRDD leaf
+        leaves = df._jdf.queryExecution().logical().collectLeaves()
+        for i in range(leaves.size()):
+            if leaves.apply(i).nodeName() == "LogicalRDD":
+                leaves.apply(i).rdd().unpersist(False)
+    return _LIB_CACHES.setdefault(entry, [])
+
+
 # ---------------------------------------------------------------------------
 # state_agg + heartbeat_agg + freq_agg rollups (integer-exact)
 # ---------------------------------------------------------------------------
@@ -231,6 +259,7 @@ def lib_state_heartbeat_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_rollup,
     )
 
+    caches = _fresh_caches("lib_state_heartbeat_freq")
     # one parquet scan for all union branches (VERDICT r8 #4) — the
     # entry's 10 family branches otherwise each re-scan the facts
     ev = t(spark, sf_dir, "events").cache()
@@ -258,6 +287,7 @@ def lib_state_heartbeat_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "1 day",
         keep_seams=True,
     ).localCheckpoint(eager=False)
+    caches += [ev, sr]
     # one explode over map entries + the meta pair, so the whole
     # state melt is a SINGLE branch (a separate stack() branch would
     # re-execute the fact scan + partials + fold a second time —
@@ -745,7 +775,9 @@ def lib_stats_counter_candle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the melted-union harness shape re-scanned the facts per branch;
     # the table is cagg-input sized at fixture scale, so a single
     # in-memory pass serves every family).
+    caches = _fresh_caches("lib_stats_counter_candle")
     ev = t(spark, sf_dir, "events").cache()
+    caches.append(ev)
     key = ["event_type"]
 
     # regression x = seconds since the DAY start, not absolute epoch:
@@ -920,6 +952,7 @@ def lib_stats_counter_candle(spark: SparkSession, sf_dir: str) -> DataFrame:
         key,
         width="1 day",
     ).localCheckpoint(eager=False)
+    caches.append(sk)
     # bin rows read the PLAIN rollup (accessor expressions attach only
     # to the small accessor branch — they'd otherwise ride through the
     # explode's analysis for nothing)
@@ -1057,16 +1090,6 @@ _SRCCAP_SALT = "sc12"
 #: column carries the normalized key itself, so the whole
 #: normalization chain is value-hash-checked cross-engine.
 _URL_GROUP = 3
-
-#: LM vocabulary caches this module's ppl family persisted (round 13,
-#: review finding): each lib_m4_split_sample construction drains the
-#: PREVIOUS construction's cache before fitting its own — the
-#: previous entry's returned plan is done being consumed by the time
-#: a new construction starts (bench/driver invoke entries serially) —
-#: so repeated invocations hold exactly one vocabulary cache instead
-#: of accumulating MEMORY_AND_DISK entries forever, without draining
-#: text._PPL_PERSISTED (other flows' caches are not ours to evict).
-_LIB_PPL_CACHES: list[DataFrame] = []
 
 
 def _m4_split_oracle() -> str:
@@ -1472,8 +1495,10 @@ def lib_m4_split_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # one scan per fact table across the union branches (VERDICT r8 #4)
+    caches = _fresh_caches("lib_m4_split_sample")
     ev = t(spark, sf_dir, "events").cache()
     docs = t(spark, sf_dir, "documents").cache()
+    caches += [ev, docs]
     ts_type = ev.schema["ts"].dataType
     null_ts = F.lit(None).cast(ts_type)
     null_bucket = F.lit(None).cast("timestamp")
@@ -1607,6 +1632,7 @@ def lib_m4_split_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("component").cast("double").alias("value"),
         null_s.alias("item"),
     )
+    caches.append(comp)
 
     # family='ppl' (round 10): CCNet-style perplexity corpus split
     # (operators/text.py::unigram_logprobs/perplexity_buckets —
@@ -1619,20 +1645,17 @@ def lib_m4_split_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         unigram_logprobs,
     )
 
-    # release the PREVIOUS construction's LM cache, then register this
-    # one in the module-owned list (see _LIB_PPL_CACHES). The fit
-    # itself is BUILD-ONCE per (sf, pid) (round 14, VERDICT r13 #3):
-    # the vocabulary-sized LM commits to a scratch artifact on the
-    # first construction and every later construction in the process
-    # (each bench pass re-constructs the whole entry) reads the
-    # committed parquet instead of re-running the explode + groupBy
-    # fit.
-    while _LIB_PPL_CACHES:
-        _LIB_PPL_CACHES.pop().unpersist()
+    # the LM's cache registers with this construction's caches. The
+    # fit itself is BUILD-ONCE per (sf, pid) (round 14, VERDICT r13
+    # #3): the vocabulary-sized LM commits to a scratch artifact on
+    # the first construction and every later construction in the
+    # process (each bench pass re-constructs the whole entry) reads
+    # the committed parquet instead of re-running the explode +
+    # groupBy fit.
     lm, oov = unigram_logprobs(
         docs.filter(F.col("doc_id") % _PPL_REF_MOD == 0),
         "text",
-        cache_registry=_LIB_PPL_CACHES,
+        cache_registry=caches,
         artifact_path=scratch_path(sf_dir, "ppl_lm"),
     )
     ppl = perplexity_buckets(
@@ -1660,7 +1683,7 @@ def lib_m4_split_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final training order + contiguous-range shard split over the
     # packed sequences (operators/sharding.py::assign_shards) — order
     # key AND shard id re-derived in the oracle from sha256, like
-    # hash_split; the write/manifest path is soaked (soak_shard.py)
+    # hash_split; the write/manifest path is soaked (SCALE.md)
     # and unit-tested with DuckDB digest re-derivation.
     from timescale_cdc_spark.operators.sharding import assign_shards
 
@@ -1908,6 +1931,7 @@ def lib_lttb_asap_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     first (m4_downsample — driver-checked in lib_m4_split_sample)."""
     from timescale_cdc_spark.operators.downsample import asap_smooth, lttb
 
+    caches = _fresh_caches("lib_lttb_asap_downsample")
     ev = t(spark, sf_dir, "events")
     inp = ev.select(
         "event_type", "ts", F.col("value").cast("double").alias("value")
@@ -1917,6 +1941,7 @@ def lib_lttb_asap_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sm = asap_smooth(inp, ["event_type"], "ts", "value", _ASAP_RESOLUTION)
     sm = sm.localCheckpoint()  # pin: reused by both gates
+    caches.append(sm)
     sm_counts = sm.groupBy("event_type").agg(F.count("*").alias("sm_n"))
     n_bad_sm_count = (
         sm_counts.where(

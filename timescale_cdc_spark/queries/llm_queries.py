@@ -138,7 +138,7 @@ NGRAM_MAX_DF = 20
 
 #: Hot-bucket star-pairing cap for the registered sketch queries
 #: (VERDICT r4 #8): pass the production skew guard through the driver
-#: path every round, not only in soak_hotkey.py. 256 is the curation
+#: path every round, not only in the hot-key soak (SCALE.md). 256 is the curation
 #: default (operators/curation.py); the fixture corpora's largest band
 #: bucket is far below it, so the guard is exercised but inert —
 #: c2_minhash_simhash's row count is unchanged (pinned in

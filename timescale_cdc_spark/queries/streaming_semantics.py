@@ -68,7 +68,7 @@ to rows a batch SQL oracle reproduces exactly:
 * family='scagg' — round 13 (VERDICT r12 #2): the STREAM-driven
   continuous aggregate, the reference hypertables' reason to exist
   (init.sql:69-72, readme.md:220), previously soak-only
-  (soak_stream_cagg.py). The full flagship integration runs live:
+  (SCALE.md, streaming cagg end-to-end). The full flagship integration runs live:
   events → envelopes → EventLog → CdcStreamPipeline (with a
   non-whitelisted 'assets' noise route that must stay out) →
   ContinuousAggregate.attach over the routed topic → real-time

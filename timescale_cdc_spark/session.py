@@ -18,6 +18,13 @@ import re
 
 from pyspark.sql import SparkSession
 
+#: Cap on any plan's string form (``spark.sql.maxPlanStringLength``).
+#: Every action renders its plan for the SQL execution event; an
+#: iterative gate's plan rendered unbounded exhausted a 7g driver heap
+#: after earlier tests filled part of it. The longest plan a plan-pin
+#: test reads is ~133k characters, so 16M characters truncates none.
+MAX_PLAN_STRING_CHARS = 1 << 24
+
 
 def driver_memory(meminfo: str) -> str:
     """Default ``spark.driver.memory`` for a host whose ``/proc/meminfo``
@@ -93,6 +100,7 @@ def get_spark(
         # messages. Emitted plans are byte-identical.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.maxPlanStringLength", str(MAX_PLAN_STRING_CHARS))
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),

@@ -77,34 +77,6 @@ def _update_state(
     )
 
 
-def running_latest_state(envelope_stream: DataFrame, pk_json_path: str) -> DataFrame:
-    """Attach the running current-state operator to an envelope stream.
-
-    Emits one row per touched key per micro-batch with the
-    now-current image (update semantics)."""
-    keyed = _keyed_envelope(envelope_stream, pk_json_path)
-    return keyed.groupBy("schema_name", "table_name", "pk").applyInPandasWithState(
-        _update_state,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# -- Spark 4 transformWithState variant --------------------------------------
-#
-# Same operator on the arbitrary-state v2 API (SPARK-45939): a
-# StatefulProcessor with a typed ValueState replaces the positional
-# state tuple. Requires (a) the RocksDB state store provider
-# (spark.sql.streaming.stateStore.providerClass =
-# ...RocksDBStateStoreProvider) and (b) the python `protobuf` package
-# in the worker environment (the v2 runner speaks protobuf to the JVM;
-# absent in this container, so tests/test_streaming.py skips the v2
-# path here). applyInPandasWithState above works on the default
-# HDFS-backed store with no extra deps, so it stays the default path.
-
-
 def _keyed_envelope(envelope_stream: DataFrame, pk_json_path: str) -> DataFrame:
     return envelope_stream.select(
         "schema_name",
@@ -120,63 +92,16 @@ def _keyed_envelope(envelope_stream: DataFrame, pk_json_path: str) -> DataFrame:
     )
 
 
-def _make_processor():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
+def running_latest_state(envelope_stream: DataFrame, pk_json_path: str) -> DataFrame:
+    """Attach the running current-state operator to an envelope stream.
 
-    class _LatestState(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("latest", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                last_ts, last_id, last_op, row = self._state.get()
-            else:
-                last_ts, last_id, last_op, row = -1, -1, None, None
-            for pdf in rows:
-                if not len(pdf):
-                    continue
-                pdf = pdf.sort_values(["ts_us", "event_id"])
-                newest = pdf.iloc[-1]
-                if (int(newest.ts_us), int(newest.event_id)) > (last_ts, last_id):
-                    last_ts, last_id = int(newest.ts_us), int(newest.event_id)
-                    last_op = str(newest.operation)
-                    row = None if last_op == "DELETE" else newest.after
-            self._state.update((last_ts, last_id, last_op, row))
-            yield pd.DataFrame(
-                [
-                    {
-                        "schema_name": key[0],
-                        "table_name": key[1],
-                        "pk": key[2],
-                        "last_ts_us": last_ts,
-                        "last_event_id": last_id,
-                        "last_operation": last_op,
-                        "current_row": row,
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return _LatestState()
-
-
-def running_latest_state_v2(
-    envelope_stream: DataFrame, pk_json_path: str
-) -> DataFrame:
-    """``running_latest_state`` on the Spark 4 ``transformWithState``
-    API — identical semantics (last-event-wins per key, DELETE
-    tombstones), state in a named ValueState instead of the positional
-    tuple. The session must use the RocksDB state store provider."""
-    return _keyed_envelope(envelope_stream, pk_json_path).groupBy(
-        "schema_name", "table_name", "pk"
-    ).transformWithStateInPandas(
-        statefulProcessor=_make_processor(),
+    Emits one row per touched key per micro-batch with the
+    now-current image (update semantics)."""
+    keyed = _keyed_envelope(envelope_stream, pk_json_path)
+    return keyed.groupBy("schema_name", "table_name", "pk").applyInPandasWithState(
+        _update_state,
         outputStructType=OUTPUT_SCHEMA,
+        stateStructType=STATE_SCHEMA,
         outputMode="update",
-        timeMode="none",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
