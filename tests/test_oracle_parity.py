@@ -46,23 +46,43 @@ def test_rows_only_queries_run(spark, sf_dir, name):
 
 
 def test_lib_entries_release_their_caches(spark, sf_dir):
-    """Each lib_* construction releases what the same entry's previous
-    construction cached or localCheckpointed (bench passes rebuild
-    every entry in one long-lived session): a second round
-    of building and counting every lib_* entry leaves the session's
-    persistent-RDD count where the first round left it. The built
-    frames stay referenced, so Spark's context cleaner cannot release
-    a leaked checkpoint behind the entry's back."""
+    """Each lib_* and c2 sketch-pairs construction releases what the
+    same entry's previous construction cached or localCheckpointed
+    (bench passes rebuild every entry in one long-lived session): a
+    second round of building and counting every such entry leaves the
+    session's persistent-RDD count where the first round left it. The
+    built frames stay referenced, so Spark's context cleaner cannot
+    release a leaked checkpoint behind the entry's back."""
+    from timescale_cdc_spark.queries.llm_queries import c2_minhash_production
+
     jsc = spark.sparkContext._jsc
     names = sorted(n for n in QUERIES if n.startswith("lib_"))
     assert len(names) == 4, names
+    builders = [QUERIES[n] for n in names + ["c2_minhash_simhash"]]
+    builders.append(c2_minhash_production)
     built, sizes = [], []
     for _ in range(2):
-        for name in names:
-            built.append(QUERIES[name](spark, sf_dir))
-            assert built[-1].count() > 0, name
+        for build in builders:
+            built.append(build(spark, sf_dir))
+            assert built[-1].count() > 0, build.__name__
         sizes.append(jsc.getPersistentRDDs().size())
     assert sizes[1] == sizes[0], sizes
+
+
+def test_c2_rebuild_compiles_no_class(spark, sf_dir):
+    """A second construction of the c2 sketch pairs generates the same
+    Java source as the first, so with get_spark's codegen cache it
+    compiles no class: the entry alone needs over 100 generated
+    classes, more than Spark's default cache of 100 holds."""
+    from timescale_cdc_spark.queries.llm_queries import c2_minhash_production
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for _ in range(2):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        assert c2_minhash_production(spark, sf_dir).count() > 0
+        compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiles[1] == 0, compiles
 
 
 #: The driver evaluates only the FIRST 50 ``queries()`` entries when it

@@ -144,6 +144,64 @@ def test_banded_candidates_hot_cold_union_plan(spark):
     assert sorted(hot) == [(0, i) for i in range(1, 20)]
 
 
+def _shuffle_exchanges(plan) -> list:
+    """Every shuffle exchange of an executed plan, looking through AQE,
+    its query stages and reused exchanges."""
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif cls == "ReusedExchangeExec":
+            todo.append(node.child())
+        else:
+            if cls == "ShuffleExchangeExec":
+                out.append(node)
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_c2_sketch_pairs_band_ids_only(spark, sf_dir):
+    """c2 featurizes once: every document is split and hashed in the
+    one job that localCheckpoints its feature row, so the pairs plan
+    reads features from the checkpoint and never splits text, and the
+    band (``bucket``) and chunk (``key``) exchanges move ids and keys
+    only — no signature or feature array rides through them."""
+    import re
+
+    from timescale_cdc_spark.operators.dedup import sketch_features
+    from timescale_cdc_spark.queries.llm_queries import (
+        _planted_docs,
+        c2_minhash_production,
+    )
+
+    feats = sketch_features(_planted_docs(spark, sf_dir), "text", "doc_id")
+    feats.collect()
+    # the final plan alone: AQE's string also prints the initial plan
+    final = feats._jdf.queryExecution().executedPlan().executedPlan()
+    assert final.toString().count("split(") == 1
+    for build in (QUERIES["c2_minhash_simhash"], c2_minhash_production):
+        df = build(spark, sf_dir)
+        df.collect()  # AQE must finalize before reading the plan
+        plan = df._jdf.queryExecution().executedPlan()
+        assert "split(" not in plan.toString(), build.__name__
+        banded = {"bucket": 0, "key": 0}
+        for ex in _shuffle_exchanges(plan):
+            m = re.search(r"\b(bucket|key)#", ex.outputPartitioning().toString())
+            if not m:
+                continue
+            banded[m.group(1)] += 1
+            out = ex.output()
+            types = [out.apply(i).dataType().simpleString() for i in range(out.size())]
+            assert not any(t.startswith("array") for t in types), (
+                build.__name__, ex.outputPartitioning().toString(), types)
+        assert banded["bucket"] and banded["key"], (build.__name__, banded)
+
+
 def test_lib_entries_scan_facts_once(spark, sf_dir):
     """Round 9 (VERDICT r8 #4): the lib_* union entries cache their
     fact scan, so every `Scan parquet` string in the executed plan is

@@ -322,6 +322,33 @@ _PORTABLE_WORD_HASH_SQL = (
 )
 
 
+def _word_front(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(_id, _w array<string>): the whitespace tokens of each non-NULL
+    text, spread over the session's cores (see _spread).
+
+    NULL-text rows are FILTERED — the exact semantics of the r12
+    explode+groupBy fronts this replaced (explode of a NULL array
+    emits nothing, so a NULL-text doc had no signature row and joined
+    no pairs). Without the filter the per-doc folds would emit
+    _fp=0 / all-NULL signatures for every NULL-text doc, banding them
+    all into one bucket as mutual hamming-0 "duplicates" (round-13
+    review finding)."""
+    from timescale_cdc_spark.functions.ident import sql_ident
+
+    # sql_ident everywhere a caller name is referenced: a name with a
+    # dot otherwise parses as a struct-field reference (pinned by
+    # test_expr_string_operators_quote_column_names)
+    return (
+        _spread(
+            df.filter(F.expr(f"{sql_ident(text_col)} IS NOT NULL"))
+        )
+        .select(
+            F.expr(sql_ident(id_col)).alias("_id"),
+            F.expr(rf"split({sql_ident(text_col)}, '\\s+')").alias("_w"),
+        )
+    )
+
+
 def _word_hash_front(
     df: DataFrame, text_col: str, id_col: str, portable: bool = False
 ) -> DataFrame:
@@ -333,32 +360,11 @@ def _word_hash_front(
     which downstream folds inherit identically in both engines). The
     array lives in its own select — CollapseProject keeps a non-cheap
     expression referenced more than once materialized (SPARK-36718),
-    so the k sketch lanes downstream never re-split the text.
-
-    NULL-text rows are FILTERED — the exact semantics of the r12
-    explode+groupBy fronts this replaced (explode of a NULL array
-    emits nothing, so a NULL-text doc had no signature row and joined
-    no pairs). Without the filter the per-doc folds would emit
-    _fp=0 / all-NULL signatures for every NULL-text doc, banding them
-    all into one bucket as mutual hamming-0 "duplicates" (round-13
-    review finding)."""
-    from timescale_cdc_spark.functions.ident import sql_ident
-
+    so the k sketch lanes downstream never re-split the text. NULL
+    texts are dropped (see _word_front)."""
     word_hash = _PORTABLE_WORD_HASH_SQL if portable else "xxhash64(w)"
-    # sql_ident everywhere a caller name is referenced: a name with a
-    # dot otherwise parses as a struct-field reference (pinned by
-    # test_expr_string_operators_quote_column_names)
-    return (
-        _spread(
-            df.filter(F.expr(f"{sql_ident(text_col)} IS NOT NULL"))
-        )
-        .select(
-            F.expr(sql_ident(id_col)).alias("_id"),
-            F.expr(
-                rf"transform(split({sql_ident(text_col)}, '\\s+'), "
-                f"w -> {word_hash})"
-            ).alias("_hw"),
-        )
+    return _word_front(df, text_col, id_col).select(
+        "_id", F.expr(f"transform(_w, w -> {word_hash})").alias("_hw")
     )
 
 
@@ -550,6 +556,30 @@ def _banded_candidates(
     return _pairs(cold).unionByName(hot_pairs).dropDuplicates(["id_a", "id_b"])
 
 
+def minhash_bands(
+    sig: DataFrame, num_hashes: int = 64, bands: int = 16,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Band rows (_id, *carry, band, bucket) of a signature frame
+    (_id, _sig, ...): one row per doc and band, bucket = xxhash64 of
+    the band's ``num_hashes // bands`` signature lanes."""
+    rows_per_band = num_hashes // bands
+    band_structs = ", ".join(
+        "struct({b} AS band, xxhash64({args}) AS bucket)".format(
+            b=b,
+            args=", ".join(
+                f"element_at(_sig, {b * rows_per_band + r + 1})"
+                for r in range(rows_per_band)
+            ),
+        )
+        for b in range(bands)
+    )
+    return sig.select(
+        "_id", *carry,
+        F.explode(F.expr(f"array({band_structs})")).alias("bb"),
+    ).select("_id", *carry, "bb.band", "bb.bucket")
+
+
 def minhash_banded(
     df: DataFrame,
     text_col: str,
@@ -567,25 +597,21 @@ def minhash_banded(
     hash modes — the bucket is a pure grouping key, never re-derived
     cross-engine: an oracle joins on the band's lane TUPLE, which is
     bucket-equality modulo xxhash64 collisions)."""
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(
         df, text_col, id_col, shingle_n, num_hashes, portable
     )
-    band_structs = ", ".join(
-        "struct({b} AS band, xxhash64({args}) AS bucket)".format(
-            b=b,
-            args=", ".join(
-                f"element_at(_sig, {b * rows_per_band + r + 1})"
-                for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
+    return minhash_bands(sig, num_hashes, bands, carry=("_sig",))
+
+
+def jaccard_est_sql(sig_a: str, sig_b: str, num_hashes: int = 64) -> str:
+    """SQL for the MinHash Jaccard estimate of two signature columns:
+    the fraction of matching lanes. SQL text, not Column lambdas
+    (round 13; see _sig_lanes_sql): one parse instead of two py4j
+    lambda constructions per call."""
+    return (
+        f"size(filter(zip_with({sig_a}, {sig_b}, (x, y) -> x = y), m -> m)) "
+        f"/ cast({float(num_hashes)!r} as double)"
     )
-    return sig.select(
-        "_id",
-        "_sig",
-        F.explode(F.expr(f"array({band_structs})")).alias("bb"),
-    ).select("_id", "_sig", "bb.band", "bb.bucket")
 
 
 def minhash_lsh_pairs(
@@ -611,13 +637,16 @@ def minhash_lsh_pairs(
     S-curve (b=16, r=4 → threshold ≈ (1/16)^(1/4) ≈ 0.5) bounds the
     candidate count.
 
-    Signatures ride THROUGH the band join (~bands × 520 B of extra
-    shuffle weight per doc) rather than being re-attached to deduped
-    pairs by id-joins afterwards: the attach joins made the physical
-    plan compute the 64-lane signature aggregation 4× (once per band
-    side + once per attach side — broadcast conversion defeats
-    exchange reuse), and re-aggregating is far more expensive than the
-    wider shuffle at any scale. The shuffle_hash hints keep the
+    On this lazy input, signatures ride THROUGH the band join
+    (~bands × 520 B of extra shuffle weight per doc) rather than being
+    re-attached to deduped pairs by id-joins afterwards: the attach
+    joins made the physical plan compute the 64-lane signature
+    aggregation 4× (once per band side + once per attach side —
+    broadcast conversion defeats exchange reuse), and re-aggregating
+    is far more expensive than the wider shuffle. A caller that
+    checkpoints its features first has nothing to recompute and bands
+    ids only (sketch_features; c2's sketch pairs, SCALE.md "c2 sketch
+    pairs featurize once"). The shuffle_hash hints keep the
     self-join's two sides as identical shuffle exchanges (no
     one-sided broadcast build of the whole sketch pipeline), measured
     2.2× faster end-to-end.
@@ -630,15 +659,9 @@ def minhash_lsh_pairs(
         df, text_col, id_col, shingle_n, num_hashes, bands, portable
     )
     cand = _banded_candidates(banded, ["band", "bucket"], "_sig", max_bucket)
-    # SQL text, not Column lambdas (round 13; see _sig_lanes_sql):
-    # same matching-lane fraction, one parse instead of two py4j
-    # lambda constructions per call
-    jaccard_est = F.expr(
-        "size(filter(zip_with(pa, pb, (x, y) -> x = y), m -> m)) "
-        f"/ cast({float(num_hashes)!r} as double)"
-    )
     return (
-        cand.withColumn("jaccard_est", jaccard_est)
+        cand.withColumn("jaccard_est",
+                        F.expr(jaccard_est_sql("pa", "pb", num_hashes)))
         .filter(F.col("jaccard_est") >= threshold)
         .select("id_a", "id_b", "jaccard_est")
     )
@@ -788,6 +811,67 @@ def _fp_sql() -> str:
     )
 
 
+def sketch_features(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_n: int = 3,
+    num_hashes: int = 64,
+    portable: bool = False,
+) -> DataFrame:
+    """One feature row per document, (_id, _sig, _fp, sh, tk): the
+    MinHash signature (as in minhash_signatures), the SimHash
+    fingerprint (as in simhash_fingerprints), and the distinct 64-bit
+    xxhash64 shingle (``sh``) and token (``tk``) sets that exact
+    Jaccard verification reads. Built for callers that checkpoint it
+    once, band ids only (minhash_bands with no carried column), pair
+    the 8-byte fingerprints (simhash_fp_pairs), then attach the array
+    features to the candidate pairs once.
+
+    Each text is split once. The production lanes hash each word once
+    with xxhash64 and share those hashes between the sketches and the
+    verify sets; the sketch shingle hash is the verify shingle hash
+    masked to 31 bits, so each shingle is hashed once too. Portable
+    lanes hash the words twice from the same split: with the sha256
+    construction for the sketches (which the oracle re-derives) and
+    with xxhash64 for the verify sets. The verify hashes are UNMASKED
+    64-bit: at ~400 distinct shingles per pair the 31-bit space gives
+    ~4e-5 collision odds per pair, 64-bit ~4e-15."""
+    if portable:
+        front = _word_front(df, text_col, id_col).select(
+            "_id",
+            F.expr(f"transform(_w, w -> {_PORTABLE_WORD_HASH_SQL})").alias("_hw"),
+            F.expr("transform(_w, w -> xxhash64(w))").alias("_xw"),
+        )
+        verify_w, hs = "_xw", _shingle_hash_sql(shingle_n, portable=True)
+    else:
+        front = _word_hash_front(df, text_col, id_col)
+        verify_w, hs = "_hw", f"transform(_s64, h -> h & {_MERSENNE_31}L)"
+    args = ", ".join(
+        f"try_element_at({verify_w}, i+{j + 1})" for j in range(shingle_n)
+    )
+    # each intermediate array in its own Project, referenced twice
+    # downstream, so CollapseProject keeps it materialized (see
+    # _sig_lanes_sql)
+    return (
+        front.withColumn(
+            "_s64",
+            F.expr(
+                f"transform(sequence(0, greatest(size({verify_w}) - "
+                f"{shingle_n}, 0)), i -> xxhash64({args}))"
+            ),
+        )
+        .withColumn("_hs", F.expr(hs))
+        .select(
+            "_id",
+            F.expr(_sig_lanes_sql(num_hashes)).alias("_sig"),
+            F.expr(_fp_sql()).alias("_fp"),
+            F.array_distinct("_s64").alias("sh"),
+            F.array_distinct(verify_w).alias("tk"),
+        )
+    )
+
+
 def simhash_pairs(
     df: DataFrame,
     text_col: str,
@@ -808,6 +892,20 @@ def simhash_pairs(
     minhash_lsh_pairs for the measured effect). ``max_bucket`` is the
     hot-bucket skew guard (star pairing; see _banded_candidates)."""
     fp = simhash_fingerprints(df, text_col, id_col, portable)
+    return simhash_fp_pairs(fp, max_hamming, chunks, max_bucket)
+
+
+def simhash_fp_pairs(
+    fp: DataFrame,
+    max_hamming: int = 3,
+    chunks: int = 4,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """(id_a, id_b, hamming) of a fingerprint frame (_id, _fp, ...):
+    the 64 bits cut into ``chunks`` keys of ``64 // chunks`` bits, one
+    row per doc and chunk carrying its 8-byte fingerprint through the
+    chunk join, verified by bit_count(xor) before anything else joins
+    the pair."""
     width = 64 // chunks
     chunk_structs = ", ".join(
         f"struct({c} AS chunk, "

@@ -46,6 +46,34 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
+#: Frames each entry cached or localCheckpointed, keyed by entry name.
+#: An entry's construction first releases what its PREVIOUS
+#: construction registered (entries are built and consumed one at a
+#: time, so that plan is done being consumed), so repeated
+#: invocations hold one construction's caches per entry instead of
+#: accumulating persistent RDDs. Keyed by entry: building one entry
+#: never drops another entry's checkpoints (entries share the fact
+#: scan's cache, whose release only costs a re-scan).
+_ENTRY_CACHES: dict[str, list[DataFrame]] = {}
+
+
+def fresh_caches(entry: str) -> list[DataFrame]:
+    """Release every frame ``entry``'s previous construction
+    registered; return the empty list this construction registers its
+    own caches into. A registered frame releases its own cache and
+    every local checkpoint its plan reads — including those an
+    operator took internally (connected_components' edge cuts)."""
+    for df in _ENTRY_CACHES.pop(entry, []):
+        df.unpersist()
+        # DataFrame.unpersist does not reach a localCheckpoint's
+        # blocks: they belong to the RDD under a LogicalRDD leaf
+        leaves = df._jdf.queryExecution().logical().collectLeaves()
+        for i in range(leaves.size()):
+            if leaves.apply(i).nodeName() == "LogicalRDD":
+                leaves.apply(i).rdd().unpersist(False)
+    return _ENTRY_CACHES.setdefault(entry, [])
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Shorthand fixture-table loader used by query functions."""
     return load_table(spark, sf_dir, name)

@@ -39,35 +39,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from timescale_cdc_spark.queries.base import register, scratch_path, t
-
-#: Frames each lib_* entry cached or localCheckpointed, keyed by entry.
-#: An entry's construction first releases what its PREVIOUS
-#: construction registered (entries are built and consumed one at a
-#: time, so that plan is done being consumed), so repeated
-#: invocations hold one construction's caches per entry instead of
-#: accumulating persistent RDDs. Keyed by entry: building one entry
-#: never drops another entry's checkpoints (entries share the fact
-#: scan's cache, whose release only costs a re-scan).
-_LIB_CACHES: dict[str, list[DataFrame]] = {}
-
-
-def _fresh_caches(entry: str) -> list[DataFrame]:
-    """Release every frame ``entry``'s previous construction
-    registered; return the empty list this construction registers its
-    own caches into. A registered frame releases its own cache and
-    every local checkpoint its plan reads — including those an
-    operator took internally (connected_components' edge cuts)."""
-    for df in _LIB_CACHES.pop(entry, []):
-        df.unpersist()
-        # DataFrame.unpersist does not reach a localCheckpoint's
-        # blocks: they belong to the RDD under a LogicalRDD leaf
-        leaves = df._jdf.queryExecution().logical().collectLeaves()
-        for i in range(leaves.size()):
-            if leaves.apply(i).nodeName() == "LogicalRDD":
-                leaves.apply(i).rdd().unpersist(False)
-    return _LIB_CACHES.setdefault(entry, [])
-
+from timescale_cdc_spark.queries.base import fresh_caches, register, scratch_path, t
 
 # ---------------------------------------------------------------------------
 # state_agg + heartbeat_agg + freq_agg rollups (integer-exact)
@@ -259,7 +231,7 @@ def lib_state_heartbeat_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_rollup,
     )
 
-    caches = _fresh_caches("lib_state_heartbeat_freq")
+    caches = fresh_caches("lib_state_heartbeat_freq")
     # one parquet scan for all union branches (VERDICT r8 #4) — the
     # entry's 10 family branches otherwise each re-scan the facts
     ev = t(spark, sf_dir, "events").cache()
@@ -775,7 +747,7 @@ def lib_stats_counter_candle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the melted-union harness shape re-scanned the facts per branch;
     # the table is cagg-input sized at fixture scale, so a single
     # in-memory pass serves every family).
-    caches = _fresh_caches("lib_stats_counter_candle")
+    caches = fresh_caches("lib_stats_counter_candle")
     ev = t(spark, sf_dir, "events").cache()
     caches.append(ev)
     key = ["event_type"]
@@ -1495,7 +1467,7 @@ def lib_m4_split_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # one scan per fact table across the union branches (VERDICT r8 #4)
-    caches = _fresh_caches("lib_m4_split_sample")
+    caches = fresh_caches("lib_m4_split_sample")
     ev = t(spark, sf_dir, "events").cache()
     docs = t(spark, sf_dir, "documents").cache()
     caches += [ev, docs]
@@ -1931,7 +1903,7 @@ def lib_lttb_asap_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     first (m4_downsample — driver-checked in lib_m4_split_sample)."""
     from timescale_cdc_spark.operators.downsample import asap_smooth, lttb
 
-    caches = _fresh_caches("lib_lttb_asap_downsample")
+    caches = fresh_caches("lib_lttb_asap_downsample")
     ev = t(spark, sf_dir, "events")
     inp = ev.select(
         "event_type", "ts", F.col("value").cast("double").alias("value")

@@ -37,7 +37,7 @@ from timescale_cdc_spark.operators.text import (
     token_stats,
     trunc6,
 )
-from timescale_cdc_spark.queries.base import register, scratch_path, t
+from timescale_cdc_spark.queries.base import fresh_caches, register, scratch_path, t
 
 # Shared planted-corpus builders -------------------------------------------
 
@@ -421,22 +421,10 @@ def c2_minhash_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry is in the headline bench, and the KMeans fit + gate joins
     would triple its cost for coverage the cheaper entry carries.)
 
-    Verify shape (round 10, VERDICT r9 #2): round 9 featurized
-    (shingles + token sets) and localCheckpointed the ENTIRE corpus,
-    then ran FOUR feature-attach joins (two per method) — the
-    full-corpus materialization alone profiled at ~3.4 s of the ~8 s
-    entry and was the real residual behind the r8→r9 growth the
-    verdict flagged (the rest was host drift, see BENCH_r10
-    coverage_notes). Now the candidate pairs are melted to
-    (pair, role∈{a,b}, doc_id) rows and joined ONCE (shuffle-hash on
-    doc_id) against the in-plan featurized corpus — featurization
-    runs once, map-side, nothing materialized — then a groupBy over
-    the ~2|pairs| joined rows reassembles both sides' features via
-    any_value. One consumption of the sketch pipelines (their
-    ShuffledHashJoin band joins stay visible in the audited plan),
-    one equi-join, one small shuffle — and the join is the shape
-    that survives 100 TB, where the corpus can neither broadcast nor
-    checkpoint.
+    Verify shape: see _c2_sketch_pairs — every document is split and
+    hashed once into one localCheckpointed feature row that both
+    sketch families and the verification gate read, released by the
+    entry's next construction.
 
     Round 13 (VERDICT r12 #1 re-profile): both sketch fronts became
     zero-shuffle per-doc array folds (see minhash_signatures), lane
@@ -454,7 +442,8 @@ def c2_minhash_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # default (1.8× cheaper pairs pipeline at sf0.1 — A/B in
     # SCALE.md; the entry's bench row carries the delta as a
     # coverage note).
-    return _c2_sketch_pairs(spark, sf_dir, portable=True)
+    return _c2_sketch_pairs(spark, sf_dir, portable=True,
+                            entry="c2_minhash_simhash")
 
 
 def c2_minhash_production(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -466,109 +455,107 @@ def c2_minhash_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage. bench.py times this one alongside it (round 16, VERDICT
     r15 #5b) so the ~2 s cryptographic-hash tax of the oracle contract
     stops masking the production path's speed in PERF."""
-    return _c2_sketch_pairs(spark, sf_dir, portable=False)
+    return _c2_sketch_pairs(spark, sf_dir, portable=False,
+                            entry="c2_minhash_production")
 
 
 def _c2_sketch_pairs(
-    spark: SparkSession, sf_dir: str, portable: bool
+    spark: SparkSession, sf_dir: str, portable: bool, entry: str
 ) -> DataFrame:
     """Shared body of the two variants above — identical plan modulo
-    the hash family inside the sketch lanes."""
+    the hash family inside the sketch lanes.
+
+    Featurize once (SCALE.md, "c2 sketch pairs featurize once"): one
+    feature row per document — MinHash signature, SimHash fingerprint
+    and the hashed verify sets (dedup.sketch_features) — is
+    localCheckpointed and registered under ``entry``, so the entry's
+    next construction releases it. MinHash bands ids only and SimHash
+    pairs its 8-byte fingerprints (both through the shared band/chunk
+    helpers and the skew-guarded candidate join of the lazy
+    operators; hamming ≤ 3 is checked there), then ONE attach join
+    brings each candidate pair its array features: the
+    pairs are melted to (pair, role∈{a,b}, _id) rows, joined
+    shuffle-hash on _id against the checkpoint, and reassembled by
+    a groupBy over the ~2|pairs| joined rows via any_value. The
+    estimate thresholds and the verification gate run on the
+    reassembled pair.
+
+    The gate (round 4, VERDICT r3 #2): minhash pairs must have
+    |jaccard_est − exact 3-gram Jaccard| ≤ 0.2, simhash pairs exact
+    unigram-set Jaccard ≥ 0.5, both over the 64-bit hashed sets."""
     from timescale_cdc_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        simhash_pairs,
+        _banded_candidates,
+        jaccard_est_sql,
+        minhash_bands,
+        simhash_fp_pairs,
+        sketch_features,
     )
 
-    corpus = _planted_docs(spark, sf_dir).localCheckpoint()
-    pairs = (
-        minhash_lsh_pairs(corpus, "text", "doc_id", threshold=0.5,
-                          max_bucket=SKETCH_MAX_BUCKET, portable=portable)
-        .select(
-            F.lit("minhash").alias("method"),
-            "id_a",
-            "id_b",
-            F.col("jaccard_est").cast("double").alias("score"),
-        )
-        .unionByName(
-            simhash_pairs(corpus, "text", "doc_id", max_hamming=3,
-                          max_bucket=SKETCH_MAX_BUCKET,
-                          portable=portable).select(
-                F.lit("simhash").alias("method"),
-                "id_a",
-                "id_b",
-                F.col("hamming").cast("double").alias("score"),
-            )
+    caches = fresh_caches(entry)
+    feats = sketch_features(
+        _planted_docs(spark, sf_dir), "text", "doc_id", portable=portable
+    ).localCheckpoint()
+    caches.append(feats)
+
+    cand = _banded_candidates(
+        minhash_bands(feats), ["band", "bucket"], "_id", SKETCH_MAX_BUCKET
+    ).select(
+        F.lit("minhash").alias("method"), "id_a", "id_b",
+        F.lit(None).cast("double").alias("_ham"),
+    ).unionByName(
+        simhash_fp_pairs(
+            feats, max_hamming=3, max_bucket=SKETCH_MAX_BUCKET
+        ).select(
+            F.lit("simhash").alias("method"), "id_a", "id_b",
+            F.col("hamming").cast("double").alias("_ham"),
         )
     )
-    melted = pairs.select(
-        "method",
-        "id_a",
-        "id_b",
-        "score",
+    is_mh = F.col("method") == "minhash"
+    pair = ["method", "id_a", "id_b", "_ham"]
+    melted = cand.select(
+        *pair,
         F.explode(
             F.array(
-                F.struct(
-                    F.lit("a").alias("role"), F.col("id_a").alias("doc_id")
-                ),
-                F.struct(
-                    F.lit("b").alias("role"), F.col("id_b").alias("doc_id")
-                ),
+                F.struct(F.lit("a").alias("role"), F.col("id_a").alias("_id")),
+                F.struct(F.lit("b").alias("role"), F.col("id_b").alias("_id")),
             )
         ).alias("_e"),
-    ).select("method", "id_a", "id_b", "score", "_e.role", "_e.doc_id")
-    # 64-bit hashed feature sets (round 13): Jaccard over xxhash64'd
-    # shingles/tokens instead of the string arrays — the attach join
-    # shuffles fixed-width longs, not text. UNMASKED 64-bit hashes
-    # (unlike the sketch's 31-bit masked lanes): at ~400 distinct
-    # shingles per pair the 31-bit space gives ~4e-5 collision odds
-    # per pair (a borderline row could flip between runs of different
-    # corpora); 64-bit gives ~4e-15. _hw gets its own select so
-    # CollapseProject keeps one split per doc (SPARK-36718).
-    feats = corpus.select(
-        "doc_id",
-        F.expr(
-            r"transform(split(text, '\\s+'), w -> xxhash64(w))"
-        ).alias("_hw"),
-    ).select(
-        "doc_id",
-        F.expr(
-            # try_element_at: ANSI-safe past-the-end NULLs on docs
-            # shorter than the shingle width (ADVICE r13, matches
-            # dedup._shingle_hash_sql)
-            "array_distinct(transform(sequence(0, greatest(size(_hw) - 3, 0)), "
-            "i -> xxhash64(try_element_at(_hw, i+1), try_element_at(_hw, i+2), "
-            "try_element_at(_hw, i+3))))"
-        ).alias("sh"),
-        F.array_distinct("_hw").alias("tk"),
-    )
-    attached = (
+    ).select(*pair, "_e.role", "_e._id")
+    # each pair carries only its own method's features: the signature
+    # and shingle set for minhash, the token set for simhash
+    joined = (
         melted.hint("shuffle_hash")
-        .join(feats.hint("shuffle_hash"), "doc_id")
-        .groupBy("method", "id_a", "id_b", "score")
-        .agg(
-            F.expr("any_value(CASE WHEN role = 'a' THEN sh END, true)")
-            .alias("_sha"),
-            F.expr("any_value(CASE WHEN role = 'b' THEN sh END, true)")
-            .alias("_shb"),
-            F.expr("any_value(CASE WHEN role = 'a' THEN tk END, true)")
-            .alias("_tka"),
-            F.expr("any_value(CASE WHEN role = 'b' THEN tk END, true)")
-            .alias("_tkb"),
+        .join(feats.hint("shuffle_hash"), "_id")
+        .select(
+            *pair, "role",
+            F.when(is_mh, F.col("_sig")).alias("_sig"),
+            F.when(is_mh, F.col("sh")).otherwise(F.col("tk")).alias("_set"),
         )
     )
-    exact_sh = F.size(F.array_intersect("_sha", "_shb")) / F.size(
-        F.array_union("_sha", "_shb")
-    )
-    exact_tk = F.size(F.array_intersect("_tka", "_tkb")) / F.size(
-        F.array_union("_tka", "_tkb")
+    side = "any_value(CASE WHEN role = '{r}' THEN {c} END, true)"
+    attached = joined.groupBy(*pair).agg(
+        *[
+            F.expr(side.format(r=r, c=c)).alias(f"{c}{r}")
+            for c in ("_sig", "_set")
+            for r in ("a", "b")
+        ]
     )
     # CASE short-circuits in codegen: each pair computes only its own
-    # method's exact metric, same per-pair work as the split branches
+    # method's estimate and exact metric
+    score = F.when(is_mh, F.expr(jaccard_est_sql("_siga", "_sigb"))).otherwise(
+        F.col("_ham")
+    )
+    exact = F.size(F.array_intersect("_seta", "_setb")) / F.size(
+        F.array_union("_seta", "_setb")
+    )
     keep = F.when(
-        F.col("method") == "minhash",
-        F.abs(F.col("score") - exact_sh) <= 0.2,
-    ).otherwise(exact_tk >= 0.5)
-    return attached.where(keep).select("method", "id_a", "id_b", "score")
+        is_mh, (F.col("score") >= 0.5) & (F.abs(F.col("score") - exact) <= 0.2)
+    ).otherwise(exact >= 0.5)
+    return (
+        attached.withColumn("score", score)
+        .where(keep)
+        .select("method", "id_a", "id_b", "score")
+    )
 
 
 #: SemDeDup planting/gate constants (method='semdedup' rows)

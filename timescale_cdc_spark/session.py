@@ -25,6 +25,21 @@ from pyspark.sql import SparkSession
 #: test reads is ~133k characters, so 16M characters truncates none.
 MAX_PLAN_STRING_CHARS = 1 << 24
 
+#: Generated classes Spark keeps compiled (``spark.sql.codegen.cache.
+#: maxEntries``, default 100). A construction generates the same Java
+#: source as the last construction of the same plan shape, so a cached
+#: class skips its Janino compile (~10 ms each on 4 vCPUs). Measured
+#: working sets (local[4]): one ``query_surface`` pass of the CDC
+#: benchmark needs 164 classes, 113 of them for
+#: ``c2_minhash_production`` alone, and one ``cdc_mixed`` iteration
+#: 118; at the default every pass compiled all of them again. With this
+#: cache warm passes compile 0 and warm iterations 14 (the ones whose
+#: per-step literals are inlined into the generated code). A whole
+#: tier-1 pytest run compiles 4,421 classes with this cache. 2000 holds
+#: both benchmark working sets ten times over; the benchmark's median
+#: live heap grew 2.5 MB (query_surface) and 3.7 MB (cdc_mixed).
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def driver_memory(meminfo: str) -> str:
     """Default ``spark.driver.memory`` for a host whose ``/proc/meminfo``
@@ -101,6 +116,14 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.maxPlanStringLength", str(MAX_PLAN_STRING_CHARS))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Name whole-stage classes without their codegen stage id. AQE
+        # numbers stages in the order they materialize, which varies
+        # from run to run, and an id in the class name then makes the
+        # same pipeline a new source (measured: 20 of c2's ~100 classes
+        # recompiled on one rebuild in three). The id stays in the
+        # plan and in the generated code's comment.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
