@@ -11,9 +11,9 @@ Two legs in one session:
   ``minhash_lsh_pairs`` / ``simhash_pairs`` operators over the same
   planted corpus, ``PROFILE_RUNS`` interleaved rounds (variants
   alternate within one session so host drift hits all equally);
-* synthetic leg: ``c2_minhash_production`` over a deterministic corpus
-  of ``PROFILE_SYN_DOCS`` documents (default 500,000) with planted
-  near-duplicates, ``PROFILE_SYN_RUNS`` runs.
+* synthetic leg: one run of ``c2_minhash_production`` over a
+  deterministic corpus of ``SYN_DOCS`` documents with planted
+  near-duplicates.
 
 Per variant it prints min/all wall seconds, the pair count and the
 Janino compiles of its last run. Env: ``SPARK_GRAFT_SF_DIR`` (fixture
@@ -46,20 +46,20 @@ from timescale_cdc_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 RUNS = int(os.environ.get("PROFILE_RUNS", "4"))
-SYN_DOCS = int(os.environ.get("PROFILE_SYN_DOCS", "500000"))
-SYN_RUNS = int(os.environ.get("PROFILE_SYN_RUNS", "1"))
 
-#: synthetic corpus shape: words per document, vocabulary size, one
-#: planted near-duplicate per NEAR_EVERY documents with NEAR_EDITS
-#: words replaced
+#: synthetic corpus shape: documents, words per document, vocabulary
+#: size, one planted near-duplicate per NEAR_EVERY documents with
+#: NEAR_EDITS words replaced, and the generator seed
+SYN_DOCS = 500_000
 SYN_WORDS = 24
 SYN_VOCAB = 8192
 NEAR_EVERY = 20
 NEAR_EDITS = 2
+SYN_SEED = 20261020
 
 
-def write_synthetic(path: str, n: int, seed: int = 20261020) -> int:
-    """Write ``documents.parquet`` (doc_id, text) under ``path``: ``n``
+def write_synthetic(path: str) -> int:
+    """Write ``documents.parquet`` (doc_id, text) under ``path``: SYN_DOCS
     random documents plus one near-duplicate of every NEAR_EVERY-th,
     NEAR_EDITS words replaced. Ids are 10·i + 1 (originals) and
     10·i + 3 (near copies), so none is a multiple of 10 and the
@@ -69,9 +69,9 @@ def write_synthetic(path: str, n: int, seed: int = 20261020) -> int:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    rng = np.random.default_rng(seed)
-    words = rng.integers(0, SYN_VOCAB, size=(n, SYN_WORDS))
-    near = np.arange(0, n, NEAR_EVERY)
+    rng = np.random.default_rng(SYN_SEED)
+    words = rng.integers(0, SYN_VOCAB, size=(SYN_DOCS, SYN_WORDS))
+    near = np.arange(0, SYN_DOCS, NEAR_EVERY)
     copies = words[near].copy()
     pos = rng.integers(0, SYN_WORDS, size=(len(near), NEAR_EDITS))
     np.put_along_axis(
@@ -82,7 +82,7 @@ def write_synthetic(path: str, n: int, seed: int = 20261020) -> int:
     def texts(rows):
         return [" ".join(r) for r in vocab[rows]]
 
-    ids = np.concatenate([np.arange(n) * 10 + 1, near * 10 + 3])
+    ids = np.concatenate([np.arange(SYN_DOCS) * 10 + 1, near * 10 + 3])
     table = pa.table({
         "doc_id": pa.array(ids, pa.int64()),
         "text": pa.array(texts(words) + texts(copies), pa.string()),
@@ -119,11 +119,11 @@ def main() -> None:
 
     syn_dir = os.environ.get("PROFILE_SYN_DIR") or tempfile.mkdtemp(prefix="c2syn-")
     t0 = time.monotonic()
-    planted = write_synthetic(syn_dir, SYN_DOCS)
+    planted = write_synthetic(syn_dir)
     print(f"synthetic: {SYN_DOCS} docs + {planted} planted near-duplicates "
           f"written in {time.monotonic() - t0:.1f}s")
     report({"syn_production": lambda: c2_minhash_production(spark, syn_dir).count()},
-           SYN_RUNS, timed)
+           1, timed)
     if not os.environ.get("PROFILE_SYN_DIR"):
         shutil.rmtree(syn_dir, ignore_errors=True)
 
